@@ -425,7 +425,7 @@ def run_scaling() -> None:
     line. ``ratio`` is t(sf1.0)/t(sf0.1); with a 10x data factor, a
     ratio materially above 10 means super-linear work — flagged.
     """
-    from gluettalax_spark import registry
+    from gluettalax_spark import memory, registry
     from gluettalax_spark.session import get_spark
 
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
@@ -445,10 +445,11 @@ def run_scaling() -> None:
         row: dict[str, float | bool] = {}
         for label, d in (("sf0.1", SF_DIR), ("sf1.0", big_dir)):
             samples = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                builder(spark, d).count()
-                samples.append(time.perf_counter() - t0)
+            with memory.scope():
+                for _ in range(runs):
+                    t0 = time.perf_counter()
+                    builder(spark, d).count()
+                    samples.append(time.perf_counter() - t0)
             row[label] = round(min(samples), 4)
         row["ratio"] = round(row["sf1.0"] / row["sf0.1"], 2)
         # 1.3 slack over the data factor absorbs timer noise on sub-second
@@ -519,35 +520,6 @@ SCALING_100X_SUBSET = [
 ]
 
 
-def _release_sweep_memory(spark) -> None:
-    """Between-operator hygiene for the long sf10 sweeps (VERDICT r11
-    task #4): localCheckpoint blocks from completed operators pile up in
-    the single local-mode heap (Spark's ContextCleaner only unpersists
-    once the py4j refs are GC'd, which lags a sequential sweep badly
-    enough that the r11 run needed SPARK_GRAFT_DRIVER_MEM=48g — the sf10
-    HITS edge-distinct was just the op that hit the ceiling, not the op
-    that filled the room). Drop the only cross-call DataFrame cache
-    (ann's assigned-table memo; it retrains on next use), then unpersist
-    every remaining storage block — nothing else holds a checkpointed
-    frame across operators, so this is safe by construction."""
-    import gc
-
-    from gluettalax_spark.memory import clear_session_df_caches
-    from gluettalax_spark.operators import ann
-
-    for k in [k for k in ann._MODEL_CACHE if isinstance(k, tuple) and k and k[0] == "ivf-assign"]:
-        del ann._MODEL_CACHE[k]
-    # Every registered session-scoped DataFrame memo (classifier logits,
-    # BPE dictionaries) must drop WITH its blocks — the unpersist-all
-    # below otherwise leaves them pointing at dead checkpoint blocks
-    # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next consumer, r12 sweep).
-    clear_session_df_caches()
-    gc.collect()  # release py4j refs so unpersist below frees the blocks
-    spark.catalog.clearCache()
-    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        jrdd.unpersist(True)
-
-
 def _merge_scaling_100x_section(partial: dict) -> None:
     """Merge a partial scaling_100x capture into BENCH_SELF.json NOW —
     crash-safe incremental persistence for a sweep that runs for an hour
@@ -581,7 +553,7 @@ def run_scaling_100x() -> None:
     ``dedup_band_spill_report`` at sf10 — the caps must ENGAGE at this
     scale (a zero there would mean the duplicate-group quadratics were
     never actually exercised)."""
-    from gluettalax_spark import registry
+    from gluettalax_spark import memory, registry
     from gluettalax_spark.session import get_spark
 
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
@@ -636,15 +608,15 @@ def run_scaling_100x() -> None:
         for label, d in (("sf0.1", SF_DIR), ("sf10", big_dir)):
             samples = []
             for _ in range(runs):
-                t0 = time.perf_counter()
-                builder(spark, d).count()
-                samples.append(time.perf_counter() - t0)
-                # Release AFTER EVERY RUN: each builder call checkpoints
-                # fresh blocks, so the previous run's are pure garbage —
-                # at sf10 two runs of deserialized edge blocks plus the
-                # join's execution memory is exactly the 8 GiB OOM the
-                # r11 sweep hit (the release sits outside the timer).
-                _release_sweep_memory(spark)
+                # A scope PER RUN: each builder call cuts fresh blocks, so
+                # the previous run's are pure garbage — at sf10 two runs
+                # of edge blocks plus the join's execution memory is
+                # exactly the 8 GiB OOM the r11 sweep hit (the release
+                # sits outside the timer).
+                with memory.scope():
+                    t0 = time.perf_counter()
+                    builder(spark, d).count()
+                    samples.append(time.perf_counter() - t0)
             row[label] = round(min(samples), 4)
         row["ratio"] = round(row["sf10"] / row["sf0.1"], 2)
         row["super_linear"] = row["ratio"] > factor * 1.3
@@ -703,8 +675,10 @@ def run_scaling_100x() -> None:
             builder = getattr(st, name, None) or getattr(sw, name)
             srow: dict[str, float | bool] = {}
             for label, d in (("sf0.1", SF_DIR), ("sf10", big_dir)):
-                df = builder(spark, d)
-                with tempfile.TemporaryDirectory(prefix="sweep100x_ckpt_") as ckpt:
+                with memory.scope(), tempfile.TemporaryDirectory(
+                    prefix="sweep100x_ckpt_"
+                ) as ckpt:
+                    df = builder(spark, d)
                     t0 = time.perf_counter()
                     q = (
                         df.writeStream.outputMode(mode)
@@ -718,7 +692,6 @@ def run_scaling_100x() -> None:
                     finally:
                         q.stop()
                     srow[label] = round(time.perf_counter() - t0, 4)
-                _release_sweep_memory(spark)
             srow["ratio"] = round(srow["sf10"] / srow["sf0.1"], 2)
             srow["super_linear"] = srow["ratio"] > factor * 1.3
             stream_results[name] = srow
@@ -734,7 +707,6 @@ def run_scaling_100x() -> None:
                     }
                 }
             )
-            _release_sweep_memory(spark)
             print(
                 f"  [stream] {name}: {srow['sf0.1']}s -> {srow['sf10']}s (x{srow['ratio']})"
                 + ("  ** SUPER-LINEAR" if srow["super_linear"] else ""),
@@ -869,7 +841,7 @@ def _calibration_probe(spark) -> float:
 
 
 def main() -> None:
-    from gluettalax_spark import registry
+    from gluettalax_spark import memory, registry
     from gluettalax_spark.session import get_spark, tune_for_fixture
 
     spark = get_spark("gluettalax-bench")
@@ -877,20 +849,8 @@ def main() -> None:
     # the fixture, so a 17 MB bench run stops paying 32 reduce tasks of
     # dispatch per shuffle. Recorded in the JSON for like-for-like reads.
     shuffle_parts = tune_for_fixture(spark, SF_DIR)
-    # A/B diagnostics (r13, VERDICT r12 #4 — NOT for graded captures;
-    # defaults leave the measured path untouched): override the tuned
-    # shuffle-partition count, disable the between-query hygiene, or
-    # restrict the sweep to the r4 subset so one knob's effect is
-    # measurable in isolation.
-    _ab_shuffle = os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE")
-    if _ab_shuffle:
-        spark.conf.set("spark.sql.shuffle.partitions", _ab_shuffle)
-        shuffle_parts = int(_ab_shuffle)
-    _no_hygiene = os.environ.get("SPARK_GRAFT_BENCH_NO_HYGIENE", "").lower() == "true"
     specs = registry.all_queries()
     names = [n for n in HEADLINE if n in specs] or sorted(specs)
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY", "") == "r4":
-        names = [n for n in R4_SUBSET if n in specs]
 
     sf = None
     try:
@@ -905,7 +865,8 @@ def main() -> None:
     # the first measured query isn't billed for interpreter warm-up.
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     if names:
-        specs[names[0]].builder(spark, SF_DIR).count()
+        with memory.scope():
+            specs[names[0]].builder(spark, SF_DIR).count()
 
     # Machine-state stabilization (r13, VERDICT r12 #4): the r12
     # early-sweep inflation (q3/q5 +30-80% in every post-change capture)
@@ -936,23 +897,21 @@ def main() -> None:
         # recorded side by side so a "regression" that is just one noisy
         # run is visible as best≈flat / median moved (or vice versa).
         samples: list[float] = []
-        for _ in range(runs_per_query):
-            t0 = time.perf_counter()
-            df = builder(spark, SF_DIR)
-            # count() executes the full plan without shipping rows to the driver.
-            df.count()
-            samples.append(time.perf_counter() - t0)
+        # One scope per key (optimization r12, guide §5): a completed
+        # key's cut blocks would otherwise pile up in the one local-mode
+        # heap — measured 2× inflation on keys run late in a long session
+        # (graph_adamic_adar 2.79 s fresh vs 5.60 s after six graph keys).
+        # Released outside the timed region; the key's N runs share their
+        # warm state, so best-of-N stays a warm number.
+        with memory.scope():
+            for _ in range(runs_per_query):
+                t0 = time.perf_counter()
+                df = builder(spark, SF_DIR)
+                # count() executes the full plan without shipping rows to the driver.
+                df.count()
+                samples.append(time.perf_counter() - t0)
         timings[name] = round(min(samples), 4)
         medians[name] = round(statistics.median(samples), 4)
-        # Between-query hygiene (optimization r12, guide §5): completed
-        # queries' localCheckpoint blocks pile up in the one local-mode
-        # heap faster than ContextCleaner can GC the py4j refs — measured
-        # 2× inflation on keys run late in a long session
-        # (graph_adamic_adar 2.79 s fresh vs 5.60 s after six graph keys).
-        # Outside the timed region; each query's 5 runs still share their
-        # in-query warm state, so best-of-5 stays a warm number.
-        if not _no_hygiene:
-            _release_sweep_memory(spark)
 
     cal_after = _calibration_probe(spark)
     io_cal_after = _io_calibration_probe(spark)
@@ -1021,15 +980,6 @@ def main() -> None:
         "stabilize_probes": stabilize_probes,
     }
     print(json.dumps(full), flush=True)
-    if _ab_shuffle or _no_hygiene or os.environ.get("SPARK_GRAFT_BENCH_ONLY"):
-        # A/B diagnostic run: never overwrite the committed capture.
-        full["ab_knobs"] = {
-            "shuffle_override": _ab_shuffle,
-            "no_hygiene": _no_hygiene,
-            "only": os.environ.get("SPARK_GRAFT_BENCH_ONLY"),
-        }
-        print(json.dumps({"metric": "ab_run", **{k: full[k] for k in ("value", "r4_subset_value", "n_queries")}, "ab_knobs": full["ab_knobs"]}), flush=True)
-        return
     try:
         self_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json")
         # Merge-preserve the --scaling / --streaming sections: a plain
@@ -1182,7 +1132,7 @@ def run_duck_anchor() -> None:
     the comparison is still the honest external yardstick asked for."""
     import duckdb
 
-    from gluettalax_spark import registry
+    from gluettalax_spark import memory, registry
     from gluettalax_spark.session import get_spark, tune_for_fixture
 
     spark = get_spark("gluettalax-bench-anchor")
@@ -1206,10 +1156,11 @@ def run_duck_anchor() -> None:
         if spec is None:
             continue
         spark_samples, duck_samples = [], []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spec.builder(spark, SF_DIR).count()
-            spark_samples.append(time.perf_counter() - t0)
+        with memory.scope():
+            for _ in range(3):
+                t0 = time.perf_counter()
+                spec.builder(spark, SF_DIR).count()
+                spark_samples.append(time.perf_counter() - t0)
         oracle = spec.resolve_oracle(SF_DIR)
         if oracle:
             for _ in range(3):

@@ -404,7 +404,7 @@ def cmd_list_queries(argv):
 @usage("<query_name> [--sf_dir=path] [--limit=num]")
 def cmd_run_query(argv):
     "Run a registered data-plane query and print its result (engine extra)"
-    from gluettalax_spark import registry
+    from gluettalax_spark import memory, registry
 
     name, kargs = parse_args(
         argv, cmd_run_query.usage, {"sf_dir": "/root/testdata/sf0.001", "limit": "20"}
@@ -412,8 +412,9 @@ def cmd_run_query(argv):
     specs = registry.all_queries()
     if name not in specs:
         raise GluettalaxCommandNotFound(f"query not found: {name}")
-    df = specs[name].builder(_spark(), kargs["sf_dir"])
-    rows = df.limit(int(kargs["limit"])).collect()
+    with memory.scope():
+        df = specs[name].builder(_spark(), kargs["sf_dir"])
+        rows = df.limit(int(kargs["limit"])).collect()
     _print_table(df.columns, [tuple(r) for r in rows])
     return 0
 

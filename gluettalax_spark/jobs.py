@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gluettalax_spark import memory
 from gluettalax_spark.exceptions import (
     JobConcurrentRunsExceeded,
     JobNotFound,
@@ -152,9 +153,12 @@ class JobRegistry:
             # jobs getting separate capacity). Thread-local, like JobGroup.
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"job_{name}")
             try:
-                result = job.fn(spark, **run.arguments)
-                if isinstance(result, DataFrame):
-                    result.count()  # materialize, like a Glue job writing output
+                # The run owns every lineage cut its function makes; they
+                # are released when the run ends, as a Glue run's resources.
+                with memory.scope():
+                    result = job.fn(spark, **run.arguments)
+                    if isinstance(result, DataFrame):
+                        result.count()  # materialize, like a Glue job writing output
                 with self._lock:
                     if run.state == RUNNING:
                         run.state = SUCCEEDED

@@ -23,7 +23,7 @@ every later query a pruned scan + local re-rank.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -174,7 +174,7 @@ def _centers_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _assignments(spark: SparkSession, sf_dir: str):
     """(vec_id, label, embedding, cell) + the fitted centroid list.
 
-    Cached per corpus dir (the `_MODEL_CACHE` doctrine below: an ANN
+    Memoized per corpus dir (the `_MODEL_CACHE` doctrine below: an ANN
     index is built once and searched many times) — four operators ride
     this quantizer (topk_ivf, the kNN-accuracy rung, the recall curve,
     cell purity), and refitting per call was pure waste. The assigned
@@ -187,58 +187,57 @@ def _assignments(spark: SparkSession, sf_dir: str):
     cell structure is DuckDB-replayable from the centroid literals."""
     # Keyed on the application id too: unlike the numpy-only PQ models,
     # a cached DataFrame dies with its SparkContext.
-    key = ("ivf-assign", fixture_fingerprint(sf_dir, "embeddings"), spark.sparkContext.applicationId)
-    if key not in _MODEL_CACHE:
-        import numpy as np
+    key = (fixture_fingerprint(sf_dir, "embeddings"), spark.sparkContext.applicationId)
+    return memory.memo("ivf-assign", key, lambda: _assign_cells(spark, sf_dir))
 
-        # Spread the scan (optimization r12): the NLIST×N sqdist folds of
-        # the assignment pass otherwise run on the single-row-group scan's
-        # one task. The checkpointed table also carries each vector's
-        # precomputed L2 norm (``v_nrm``, same serial fold order as the
-        # per-pair `_norm` it replaces) so every consumer's cosine pays
-        # ONE fold per candidate pair instead of three.
-        emb = load_spread(spark, sf_dir, "embeddings")
-        scored = emb.select("vec_id", "label", "embedding").crossJoin(
-            F.broadcast(_centers_df(spark, sf_dir))
+
+def _assign_cells(spark: SparkSession, sf_dir: str):
+    import numpy as np
+
+    # Spread the scan (optimization r12): the NLIST×N sqdist folds of
+    # the assignment pass otherwise run on the single-row-group scan's
+    # one task. The checkpointed table also carries each vector's
+    # precomputed L2 norm (``v_nrm``, same serial fold order as the
+    # per-pair `_norm` it replaces) so every consumer's cosine pays
+    # ONE fold per candidate pair instead of three.
+    emb = load_spread(spark, sf_dir, "embeddings")
+    scored = emb.select("vec_id", "label", "embedding").crossJoin(
+        F.broadcast(_centers_df(spark, sf_dir))
+    )
+    assigned = memory.cut(scored.select(
+        "vec_id",
+        "label",
+        "embedding",
+        F.struct(
+            F.round(_sqdist(F.col("embedding"), F.col("c_emb")), 4).alias("dist"),
+            F.col("cell"),
+        ).alias("_cand"),
+    )
+    .groupBy("vec_id")
+    .agg(
+        F.min("_cand").alias("_best"),
+        F.first("label").alias("label"),
+        F.first("embedding").alias("embedding"),
+    )
+    .select(
+        "vec_id",
+        "label",
+        "embedding",
+        F.col("_best.cell").alias("cell"),
+        _norm(F.col("embedding")).alias("v_nrm"),
+    )
+    # The checkpoint's partition count is what every consumer's
+    # candidate-scoring stage inherits; floor it at the core count
+    # (bench runs tune shuffle.partitions below cores for the
+    # dispatch floor — never shrink a production-sized layout).
+    .repartition(
+        max(
+            spark.sparkContext.defaultParallelism,
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
         )
-        assigned = (
-            scored.select(
-                "vec_id",
-                "label",
-                "embedding",
-                F.struct(
-                    F.round(_sqdist(F.col("embedding"), F.col("c_emb")), 4).alias("dist"),
-                    F.col("cell"),
-                ).alias("_cand"),
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.min("_cand").alias("_best"),
-                F.first("label").alias("label"),
-                F.first("embedding").alias("embedding"),
-            )
-            .select(
-                "vec_id",
-                "label",
-                "embedding",
-                F.col("_best.cell").alias("cell"),
-                _norm(F.col("embedding")).alias("v_nrm"),
-            )
-            # The checkpoint's partition count is what every consumer's
-            # candidate-scoring stage inherits; floor it at the core count
-            # (bench runs tune shuffle.partitions below cores for the
-            # dispatch floor — never shrink a production-sized layout).
-            .repartition(
-                max(
-                    spark.sparkContext.defaultParallelism,
-                    int(spark.conf.get("spark.sql.shuffle.partitions")),
-                )
-            )
-            .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
-        )
-        centers = [np.asarray(c) for c in np.asarray(_ivf_centers_np(sf_dir))]
-        _MODEL_CACHE[key] = (assigned, centers)
-    return _MODEL_CACHE[key]
+    ), "eager_ckpt")
+    centers = [np.asarray(c) for c in np.asarray(_ivf_centers_np(sf_dir))]
+    return assigned, centers
 
 
 def _ivf_topk_ctes(sf_dir: str) -> str:
@@ -372,7 +371,7 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gluettalax_spark.operators.similarity import similarity_topk
 
     exact = similarity_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    exact = exact.persist(CKPT_LEVEL)  # feeds the hit join AND the denominator
+    exact = memory.cut(exact, "persist")  # feeds the hit join AND the denominator
     hits = exact.join(
         res.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "leftsemi"
     )
@@ -552,8 +551,8 @@ def similarity_knn_label_accuracy_ivf(spark: SparkSession, sf_dir: str) -> DataF
             ).alias("cosine"),
         )
     )
-    ivf_topk = _knn_topk(scored).persist(CKPT_LEVEL)
-    exact_topk = _knn_topk(_knn_scored_exact(spark, sf_dir)).persist(CKPT_LEVEL)
+    ivf_topk = memory.cut(_knn_topk(scored), "persist")
+    exact_topk = memory.cut(_knn_topk(_knn_scored_exact(spark, sf_dir)), "persist")
 
     pred_ivf = _knn_predict_from_topk(ivf_topk)
     pe_full = _knn_predict_from_topk(exact_topk)
@@ -995,7 +994,7 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gluettalax_spark.operators.similarity import similarity_topk
 
     exact = similarity_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    exact = exact.persist(CKPT_LEVEL)  # feeds the hit join AND the denominator
+    exact = memory.cut(exact, "persist")  # feeds the hit join AND the denominator
     hits = exact.join(
         res.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "leftsemi"
     )
@@ -1385,7 +1384,7 @@ def similarity_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    scored_once = scored_once.persist(CKPT_LEVEL)  # scored pairs feed every rung
+    scored_once = memory.cut(scored_once, "persist")  # scored pairs feed every rung
     cand = (
         scored_once.join(F.broadcast(np_df), F.col("rn") <= F.col("nprobe"))
         .select("nprobe", "query_id", "neighbor_id", "cosine")
@@ -1401,7 +1400,7 @@ def similarity_ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gluettalax_spark.operators.similarity import similarity_topk
 
     exact = similarity_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    exact = exact.persist(CKPT_LEVEL)  # feeds the hit join AND the denominator
+    exact = memory.cut(exact, "persist")  # feeds the hit join AND the denominator
     hits = (
         topk.join(exact, ["query_id", "neighbor_id"], "leftsemi")
         .groupBy("nprobe")

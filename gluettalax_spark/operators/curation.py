@@ -27,7 +27,7 @@ after runs on metadata-scale tables.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -391,7 +391,7 @@ def stats_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("source").alias("x"), F.col("lang").alias("y"))
         .agg(F.count("*").cast("long").alias("cxy"))
     )
-    xy = xy.persist(CKPT_LEVEL)  # grid feeds marginals, total, and the fold
+    xy = memory.cut(xy, "persist")  # grid feeds marginals, total, and the fold
     mx = xy.groupBy("x").agg(F.sum("cxy").cast("long").alias("cx"))
     my = xy.groupBy("y").agg(F.sum("cxy").cast("long").alias("cy"))
     nn = xy.agg(F.sum("cxy").cast("long").alias("n"))
@@ -481,7 +481,7 @@ def stats_grubbs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("ts").cast("date").alias("day"))
         .agg(F.count("*").cast("long").alias("c"))
     )
-    daily = daily.persist(CKPT_LEVEL)  # feeds both the moment fold and the argmax
+    daily = memory.cut(daily, "persist")  # feeds both the moment fold and the argmax
     m = daily.agg(
         F.count("*").cast("long").alias("n_days"),
         F.sum("c").cast("long").alias("s1"),
@@ -691,7 +691,7 @@ def stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("r")
         )
     )
-    daily = daily.persist(CKPT_LEVEL)  # feeds the pair join, ties, and the count
+    daily = memory.cut(daily, "persist")  # feeds the pair join, ties, and the count
     a, b = daily.alias("a"), daily.alias("b")
     s = (
         a.join(F.broadcast(b), F.col("a.day") < F.col("b.day"))
@@ -1050,7 +1050,7 @@ def orders_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     dict_df = (
         daily.groupBy("d").agg(F.count("*").cast("long").alias("nv")).withColumn("_g", F.lit(1))
     )
-    dict_df = dict_df.persist(CKPT_LEVEL)  # feeds rank, m, and the fold
+    dict_df = memory.cut(dict_df, "persist")  # feeds rank, m, and the fold
     ranked = grouped_running_sum(dict_df, ["_g"], ["d"], "nv", "cum")
     m = dict_df.agg(
         F.sum("nv").cast("long").alias("n"),
@@ -1301,7 +1301,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             " / CAST(sum(CASE WHEN in_a = 0 THEN n END) AS DOUBLE)"
         ).alias("diff")
     )
-    diffs = diffs.persist(CKPT_LEVEL)  # 32 rows feed obs + the fold
+    diffs = memory.cut(diffs, "persist")  # 32 rows feed obs + the fold
     obs = diffs.filter("b = 0").select(F.col("diff").alias("diff_obs"))
     return (
         diffs.crossJoin(F.broadcast(obs))
@@ -1641,13 +1641,13 @@ def quality_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             " THEN x.q_int ELSE acc.med END)).med AS m"
         )
     )
-    scored = (
+    scored = memory.cut(
         j.crossJoin(F.broadcast(med))
         .selectExpr(
             f"{_ECE_P_E6} AS p_e6",
             "CASE WHEN q_int > m THEN 1 ELSE 0 END AS y",
-        )
-        .persist(CKPT_LEVEL)  # feeds the bin grid and the total fold
+        ),
+        "persist",  # feeds the bin grid and the total fold
     )
     bins = scored.groupBy(F.expr("least(p_e6 * 10 DIV 1000000, 9)").alias("bin")).agg(
         F.count("*").cast("long").alias("nb"),
@@ -1861,14 +1861,14 @@ def events_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.col("ts").cast("date")).alias("base"),
         F.max(F.col("ts").cast("date")).alias("last"),
     )
-    uw = (
+    uw = memory.cut(
         events.crossJoin(F.broadcast(d0))
         .selectExpr(
             "user_id",
             "CAST(datediff(CAST(ts AS DATE), base) DIV 7 AS BIGINT) AS wk",
         )
-        .distinct()
-        .persist(CKPT_LEVEL)  # feeds first-seen AND the retained probe
+        .distinct(),
+        "persist",  # feeds first-seen AND the retained probe
     )
     first_wk = uw.groupBy("user_id").agg(F.min("wk").cast("long").alias("cohort_wk"))
     max_wk = d0.selectExpr("CAST(datediff(last, base) DIV 7 AS BIGINT) AS maxw")
@@ -2163,7 +2163,7 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     dict_df = (
         daily.groupBy("v").agg(F.count("*").cast("long").alias("nv")).withColumn("_g", F.lit(1))
     )
-    dict_df = dict_df.persist(CKPT_LEVEL)
+    dict_df = memory.cut(dict_df, "persist")
     ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
     m = dict_df.agg(
         F.sum("nv").cast("long").alias("n"),
@@ -2249,7 +2249,7 @@ def dedup_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 A/B (count, best-of-3): persist 2.23 s < eager/lazy ckpt 2.87
     # < none 4.24 — the key's r12 regression lives in the CC loop, not
     # this cut; persist kept.
-    names = names.persist(CKPT_LEVEL)  # feeds pairs AND the rollup join
+    names = memory.cut(names, "persist")  # feeds pairs AND the rollup join
     pairs = _fuzzy_pairs(names).select(
         F.concat_ws("|", "brand", "a_name").alias("u"),
         F.concat_ws("|", "brand", "b_name").alias("v"),
@@ -2561,11 +2561,11 @@ def similarity_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
         .filter(F.size("ps") <= MAX_BASKET)
     )
-    op = op.persist(CKPT_LEVEL)  # feeds supports AND the pair explode
+    op = memory.cut(op, "persist")  # feeds supports AND the pair explode
     supp = op.select(F.explode("ps").alias("p")).groupBy("p").agg(
         F.count("*").cast("long").alias("np")
     )
-    supp = supp.persist(CKPT_LEVEL)  # feeds focal AND both cosine joins
+    supp = memory.cut(supp, "persist")  # feeds focal AND both cosine joins
     co = (
         op.select(
             F.explode(
@@ -2668,7 +2668,7 @@ def events_markov_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ordered.groupBy(
         F.col("event_type").alias("prev_type"), "next_type"
     ).agg(F.count("*").cast("long").alias("n"))
-    pairs = pairs.persist(CKPT_LEVEL)  # k² grid feeds pred + the score
+    pairs = memory.cut(pairs, "persist")  # k² grid feeds pred + the score
     wp = Window.partitionBy("prev_type").orderBy(F.col("n").desc(), F.col("next_type"))
     pred = (
         pairs.withColumn("rk", F.row_number().over(wp))
@@ -2932,14 +2932,14 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = docs.select("doc_id", F.round(quality * 10000).cast("long").alias("v"))
     # r13 A/B: persist 1.47 ≈ eager 1.44 ≈ lazy 1.53 (count, best-of-3)
     # — tied within noise; persist kept (no build-time job).
-    q = q.persist(CKPT_LEVEL)  # feeds the split bound, dict, and counts
+    q = memory.cut(q, "persist")  # feeds the split bound, dict, and counts
     b = q.agg(F.expr("(min(doc_id) + max(doc_id)) div 2").alias("mid"))
     d = (
         q.groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("nv"))
         .withColumn("_g", F.lit(1))
     )
-    d = d.persist(CKPT_LEVEL)  # value dictionary; feeds the running rank AND nn
+    d = memory.cut(d, "persist")  # value dictionary; feeds the running rank AND nn
     r = grouped_running_sum(d, ["_g"], ["v"], "nv", "cum").select("v", "nv", "cum")
     nn = d.agg(F.sum("nv").cast("long").alias("n"))
     dec = r.crossJoin(F.broadcast(nn)).selectExpr(
@@ -2954,7 +2954,7 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("doc_id") > F.col("mid"), 1)).cast("long").alias("c_cur"),
         )
     )
-    c = c.persist(CKPT_LEVEL)  # 10 rows, but its subtree joins the corpus:
+    c = memory.cut(c, "persist")  # 10 rows, but its subtree joins the corpus:
     # consumed by t, the total, and the final projection (3 executions
     # of the corpus join without the cut — optimization r12)
     t = c.agg(

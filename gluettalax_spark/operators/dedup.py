@@ -18,7 +18,7 @@ threshold 0.5 used here.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -229,7 +229,7 @@ def _cap_band_buckets(bands: DataFrame, key_cols: list[str], id_col: str, cap: i
     # probe and (on the skew path) BOTH broadcasts without recomputing
     # the size aggregate per consumer. Lazy persist fuses the old
     # checkpoint job with the isEmpty probe right below (r12).
-    over = sizes.filter(F.col("bucket_n") > cap).persist(CKPT_LEVEL)
+    over = memory.cut(sizes.filter(F.col("bucket_n") > cap), "persist")
     spill = over.select(*key_cols, "bucket_n")
     if over.isEmpty():
         star = bands.limit(0).select(
@@ -353,7 +353,7 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = ex.groupBy("doc_id").agg(
         *_minhash_sig_aggs(), F.collect_set("hs").alias("shingles")
     )
-    return sigs.persist(CKPT_LEVEL)
+    return memory.cut(sigs, "persist")
 
 
 @register("dedup_minhash_lsh", _minhash_oracle(), doc="MinHash(16) + LSH(4×4) near-dup pairs, Jaccard-verified")
@@ -694,7 +694,7 @@ def dedup_simhash_pairs(
     # "write the fingerprint table, then self-join it". Lazy persist, not
     # eager checkpoint (optimization r12): no build-time driver-blocking
     # job, columnar cache serves both sides; nothing needs a frozen plan.
-    hashes = _simhash_df(spark, sf_dir).persist(CKPT_LEVEL)
+    hashes = memory.cut(_simhash_df(spark, sf_dir), "persist")
     bands = hashes.select(
         "doc_id",
         "simhash",
@@ -823,10 +823,10 @@ def dedup_ngram_jaccard(
     # may broadcast one side, losing exchange reuse and recomputing the
     # shingle→hash→agg chain twice). Lazy persist (optimization r12):
     # same one-materialization guarantee, no build-time blocking job.
-    blocks = hs.withColumn(
+    blocks = memory.cut(hs.withColumn(
         "block_key",
         F.md5(F.concat_ws("|", F.slice(F.array_sort("hset"), 1, 3).cast("array<string>"))),
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     kept, star, _spill = _cap_band_buckets(blocks, ["block_key"], "doc_id", max_bucket)
     a = kept.select(
         F.col("doc_id").alias("doc_a"), F.col("hset").alias("sh_a"), "block_key"
@@ -1142,7 +1142,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").alias("hs"))
         .distinct()
     )
-    ex = ex.persist(CKPT_LEVEL)  # sizes + inverted index share the scan
+    ex = memory.cut(ex, "persist")  # sizes + inverted index share the scan
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     w = Window.partitionBy("hs")
@@ -1293,7 +1293,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = ex.groupBy("doc_id").agg(
         *_minhash_sig_aggs(), F.collect_set("hs").alias("hset")
     )
-    sigs = sigs.persist(CKPT_LEVEL)  # band explode + both pair sides (lazy: r12)
+    sigs = memory.cut(sigs, "persist")  # band explode + both pair sides (lazy: r12)
     bands = sigs.select("doc_id", F.explode(_minhash_band_array()).alias("band")).select(
         "doc_id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_val").alias("band_val")
     )
@@ -1675,9 +1675,9 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     to doc-keyed shingles via equi-joins — the pair list broadcasts,
     the shingle table shuffles once on doc_id."""
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b", "jaccard")
-    pairs = pairs.persist(CKPT_LEVEL)  # bounded near-dup list, reused 2x
+    pairs = memory.cut(pairs, "persist")  # bounded near-dup list, reused 2x
     ds = shingles_exploded(spark, sf_dir).distinct()
-    ds = ds.persist(CKPT_LEVEL)  # feeds df, docw, and both pair sides
+    ds = memory.cut(ds, "persist")  # feeds df, docw, and both pair sides
     nd = ds.select("doc_id").distinct().agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     w = (
         ds.groupBy("s")
@@ -1689,7 +1689,7 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dsw = ds.join(w, "s")
-    dsw = dsw.persist(CKPT_LEVEL)  # weighted shingles feed docw AND inter
+    dsw = memory.cut(dsw, "persist")  # weighted shingles feed docw AND inter
     docw = dsw.groupBy("doc_id").agg(F.sum("w_micro").cast("long").alias("w_total"))
     a = dsw.join(
         F.broadcast(pairs.select("doc_a", "doc_b")),
@@ -1871,7 +1871,7 @@ def dedup_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(0).alias("is_dup"),
         )
     )
-    ver = ver.persist(CKPT_LEVEL)  # feeds per-cfg counts AND the union truth
+    ver = memory.cut(ver, "persist")  # feeds per-cfg counts AND the union truth
     truth = (
         ver.filter(F.col("is_dup") == 1)
         .select("doc_a", "doc_b")
@@ -1954,7 +1954,7 @@ def dedup_storage_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
     f = docs.select("doc_id", "source", "n_chars", fp.alias("fp"))
-    f = f.persist(CKPT_LEVEL)  # feeds the keeper agg AND the join back
+    f = memory.cut(f, "persist")  # feeds the keeper agg AND the join back
     k = f.groupBy("fp").agg(F.min("doc_id").alias("keeper"))
     return (
         f.join(k, "fp")
@@ -2088,7 +2088,7 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = _substring_grams(spark, sf_dir)
     # Feeds the duplicate-set aggregate AND the semi-join probe: cut the
     # lineage so the posexplode+window pipeline runs once, not twice.
-    grams = grams.persist(CKPT_LEVEL)
+    grams = memory.cut(grams, "persist")
     dup = (
         grams.groupBy("g")
         .agg(F.count(F.lit(1)).alias("n_occ"), F.countDistinct("doc_id").alias("df"))
@@ -2305,7 +2305,7 @@ def dedup_substring_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
     already bounds each gram's doc list), so nothing is corpus-
     quadratic. One shuffle on the md5 key, one on the source pair."""
     grams = _substring_grams(spark, sf_dir)
-    grams = grams.persist(CKPT_LEVEL)  # feeds dup agg + the semi-join
+    grams = memory.cut(grams, "persist")  # feeds dup agg + the semi-join
     dup = (
         grams.groupBy("g")
         .agg(F.count(F.lit(1)).alias("n_occ"), F.countDistinct("doc_id").alias("df"))
@@ -2319,7 +2319,7 @@ def dedup_substring_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("g", "source")
         .distinct()
     )
-    gs = gs.persist(CKPT_LEVEL)  # both sides of the per-gram self-join
+    gs = memory.cut(gs, "persist")  # both sides of the per-gram self-join
     a = gs.select("g", F.col("source").alias("source_a"))
     b = gs.select(F.col("g").alias("g_b"), F.col("source").alias("source_b"))
     return (

@@ -20,9 +20,7 @@ MapReduce and Beyond") — same join primitive, provably fewer rounds.
 
 from __future__ import annotations
 
-import os
-
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,19 +48,12 @@ class _GenerationRotator:
     Spark's ContextCleaner lags a tight sequential loop badly enough that
     at sf10 the dead generations starve hash-aggregate execution memory
     (the r12 sweep's UNABLE_TO_ACQUIRE_MEMORY at the default 8g heap).
-    The rotator reads the checkpoint RDD's id straight off the returned
-    frame's ``LogicalRDD`` and, once the new generation is materialized
-    AND the loop no longer references the old one, unpersists exactly the
-    old generation's blocks. (It previously DIFFED the whole
-    persistent-RDD id set around the call — but a lazy checkpoint
-    executes upstream stages at call time, so any not-yet-materialized
-    upstream ``persist`` — CC's ``sym``, a caller's ``_minhash_sigs`` —
-    first registered inside that window, was misattributed to the new
-    generation, and round-1 ``retire()`` silently dropped the
-    multi-consumer cache; ADVICE r12.) Unpersisting a locally-
-    checkpointed RDD makes it unrecomputable — callers must only
-    ``retire()`` after the last read. Cluster analog: deleting the
-    previous round's checkpoint files.
+    Once the new generation is materialized AND the loop no longer
+    references the old one, the rotator releases exactly the old
+    generation's checkpoint RDD through ``memory.release``, ahead of the
+    enclosing scope. Unpersisting a locally-checkpointed RDD makes it
+    unrecomputable — callers must only ``retire()`` after the last read.
+    Cluster analog: deleting the previous round's checkpoint files.
 
     Why localCheckpoint and not persist (r12 post-mortem): a persist cut
     does NOT truncate the LOGICAL plan — CacheManager substitution only
@@ -73,9 +64,9 @@ class _GenerationRotator:
     lineage per generation is load-bearing here; the AQE stage execution
     a lazy checkpoint runs at call time is the price."""
 
-    def __init__(self, spark: SparkSession) -> None:
-        self._jsc = spark.sparkContext._jsc
-        self._live: set[int] = set()
+    def __init__(self) -> None:
+        self._live: DataFrame | None = None
+        self._pending: DataFrame | None = None
 
     def checkpoint(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """``eager=False`` is safe ONLY when the caller runs an action on
@@ -85,23 +76,14 @@ class _GenerationRotator:
         Loops whose convergence probe already consumes the new frame get
         the final-stage materialization fused with the probe (under AQE
         the upstream stages still execute at call time)."""
-        out = df.localCheckpoint(eager=eager, storageLevel=CKPT_LEVEL)
-        # Track ONLY the checkpoint RDD this call created: the analyzed
-        # plan of a checkpointed frame is a LogicalRDD over exactly the
-        # persisted RDD. A snapshot diff would also catch unrelated RDDs
-        # registered while the lazy checkpoint ran upstream stages.
-        self._pending = {out._jdf.queryExecution().analyzed().rdd().id()}
-        return out
+        self._pending = memory.cut(df, "eager_ckpt" if eager else "lazy_ckpt")
+        return self._pending
 
     def retire(self) -> None:
         """Unpersist the PREVIOUS generation; promote the pending one."""
-        rdds = self._jsc.getPersistentRDDs()
-        for rid in self._live:
-            jrdd = rdds.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-        self._live = getattr(self, "_pending", set())
-        self._pending = set()
+        if self._live is not None:
+            memory.release([self._live])
+        self._live, self._pending = self._pending, None
 
 
 def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
@@ -122,8 +104,8 @@ def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
     )
     # Static across rounds; lazy persist (r12) — the first round's
     # convergence probe materializes it, no separate build-time job.
-    sym = sym.distinct().persist(CKPT_LEVEL)
-    rot = _GenerationRotator(edges.sparkSession)
+    sym = memory.cut(sym.distinct(), "persist")
+    rot = _GenerationRotator()
     # eager=False throughout (optimization r12, the kcore §5 fusion): every
     # round's `changed` count consumes the new generation BEFORE retire(),
     # so the checkpoint materializes inside the probe — one driver-blocking
@@ -142,14 +124,15 @@ def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
     # over the new generation alone — the same single job that
     # materializes the lazy checkpoint, one join fewer per round.
     # decimal(38,0) keeps the sum exact at any node-id scale. Only valid
-    # for NUMERIC labels (ids); string node keys (the fuzzy-name graph)
-    # keep the join-probe — min() still decreases lexicographically but
-    # has no exact sum.
+    # for INTEGRAL labels (ids): a fractional decimal would be rounded by
+    # the cast, so two different label vectors could share a sum, and
+    # string node keys (the fuzzy-name graph) have no sum at all — both
+    # keep the join-probe.
     from pyspark.sql.types import ByteType, DecimalType, IntegerType, LongType, ShortType
 
-    sum_probe = isinstance(
-        labels.schema["lab"].dataType,
-        (ByteType, ShortType, IntegerType, LongType, DecimalType),
+    lab_type = labels.schema["lab"].dataType
+    sum_probe = isinstance(lab_type, (ByteType, ShortType, IntegerType, LongType)) or (
+        isinstance(lab_type, DecimalType) and lab_type.scale == 0
     )
     prev_sum = None
     for _ in range(_FALLOVER_ROUNDS):
@@ -170,7 +153,8 @@ def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> Da
             cur_sum = new_labels.agg(
                 F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
             ).collect()[0]["s"]
-            done = cur_sum == prev_sum
+            # A NULL sum (every label NULL) proves nothing: keep iterating.
+            done = cur_sum is not None and cur_sum == prev_sum
             prev_sum = cur_sum
         else:
             done = (
@@ -359,7 +343,7 @@ def connected_components_star(edges: DataFrame, src: str = "u", dst: str = "v") 
     rounds for plain min-label propagation (`connected_components`). Same
     fixpoint; tests assert equivalence. Use this variant for deep/chained
     graphs; the min-label one for shallow near-dup clusters."""
-    rot = _GenerationRotator(edges.sparkSession)
+    rot = _GenerationRotator()
     # eager=False (r12, the kcore §5 fusion): the isEmpty probe / per-round
     # convergence compare consume each generation before retire(), so the
     # checkpoint materializes inside the probe job it already pays for.
@@ -570,7 +554,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Cut lineage: the edge set feeds four consumers (deg, orientation,
     # wedge join, close join) — recomputing the basket explode per
     # consumer would dominate the runtime.
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
 
     deg = (
         edges.select(F.col("pa").alias("n"))
@@ -592,7 +576,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("src", "dst", F.col("deg_dst_hi").alias("deg_dst"))
     )
-    ed = ed.persist(CKPT_LEVEL)
+    ed = memory.cut(ed, "persist")
 
     # Wedges at the orientation-minimum vertex: two out-neighbors of the
     # same src, ordered by (degree, id) so the closing edge is oriented.
@@ -624,8 +608,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PR_ITERS = 8
 # Rounds per lineage cut (round fusion, r13): each pagerank round
 # references its predecessor once, so the plan grows linearly between
-# cuts; env-overridable ONLY for the A/B harness.
-_PR_CKPT_EVERY = int(os.environ.get("SPARK_GRAFT_PR_CKPT_EVERY", "4"))
+# cuts.
+_PR_CKPT_EVERY = 4
 _PR_TOPK = 20
 # Fixed-point arithmetic for the rank vector: ranks live in integer
 # units of 1e-12 ("e12"), damping 0.85 is the exact rational 85/100, and
@@ -719,17 +703,17 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     side; the rank side is (node, long) — the narrowest possible
     shuffle.
     """
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
 
     sym = edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
         edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
     )
     deg = sym.groupBy(F.col("src").alias("n")).agg(F.count(F.lit(1)).alias("d"))
     # Static per-iteration input: (src, dst, d_src), frozen once.
-    adj = (
+    adj = memory.cut(
         sym.join(deg.withColumnRenamed("n", "src"), "src")
-        .select("src", "dst", F.col("d").alias("d_src"))
-        .persist(CKPT_LEVEL)
+        .select("src", "dst", F.col("d").alias("d_src")),
+        "persist",
     )
 
     n_nodes = deg.count()
@@ -763,7 +747,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # A/B measured the 8-deep InMemoryRelation chain 3x slower
         # (7.7 s vs 2.5 s builder+count).
         if it % _PR_CKPT_EVERY == 0 or it == _PR_ITERS:
-            ranks = ranks.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+            ranks = memory.cut(ranks, "lazy_ckpt")
 
     mass = ranks.agg(F.sum("r").cast("long").alias("mass_e12"))
     return (
@@ -836,7 +820,7 @@ def _lpa_edges_and_labels(spark: SparkSession, sf_dir: str):
     """(undirected edges, final LPA labels) — the per-round join + count
     + min(struct) argmax shape documented on :func:`graph_communities_lpa`;
     shared with :func:`graph_modularity` so both score the same labeling."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
     sym = edges.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionAll(
         edges.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
     )
@@ -848,19 +832,19 @@ def _lpa_edges_and_labels(spark: SparkSession, sf_dir: str):
             F.col("u").alias("node"), "lab"
         )
         cnt = nbr.groupBy("node", "lab").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        labels = memory.cut(
             cnt.groupBy("node")
             .agg(
                 F.min(
                     F.struct((-F.col("c")).alias("nc"), F.col("lab").alias("l"))
                 ).alias("m")
             )
-            .select("node", F.col("m.l").alias("lab"))
+            .select("node", F.col("m.l").alias("lab")),
             # persist, not localCheckpoint (r12): AQE executes upstream
             # stages at even a lazy checkpoint call — 3 blocking builder
             # jobs; the CacheManager substitution keeps plans one round
             # deep with zero build-time execution (see graph_pagerank).
-            .persist(CKPT_LEVEL)
+            "persist",
         )
     return edges, labels
 
@@ -1043,7 +1027,7 @@ def sql_recursive_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     and bounded. The edge SET is materialized once behind a temp view
     (see the comment on ``_REACH_SQL``) — the recursion itself is what
     runs in Catalyst."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
     edges.createOrReplaceTempView("gx_reach_edges")
     return spark.sql(_REACH_SQL.format(edges="gx_reach_edges"))
 
@@ -1209,7 +1193,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     -k-core default (Montresor et al.); degeneracy-ordering variants
     trade more machinery for fewer rounds and keep the same per-round
     join primitive."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
     for _ in range(_KCORE_MAX_ROUNDS):
         # Checkpoint the (node-sized) degree table: the convergence probe
         # AND the keep-set filter both consume it, and without the cut
@@ -1220,21 +1204,21 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # each round references the previous generation 3x (union + two
         # semi-joins via keep), so without lineage truncation the logical
         # plan grows 3^rounds and the driver OOMs analyzing it (observed).
-        deg = (
+        deg = memory.cut(
             edges.select(F.col("pa").alias("n"))
             .unionAll(edges.select(F.col("pb").alias("n")))
             .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+            .agg(F.count(F.lit(1)).alias("d")),
+            "lazy_ckpt",
         )
         if deg.filter(F.col("d") < _KCORE_K).count() == 0:
             break
         keep = deg.filter(F.col("d") >= _KCORE_K).select("n")
-        edges = (
+        edges = memory.cut(
             edges.join(keep.withColumnRenamed("n", "pa"), "pa", "left_semi")
             .join(keep.withColumnRenamed("n", "pb"), "pb", "left_semi")
-            .select("pa", "pb")
-            .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+            .select("pa", "pb"),
+            "lazy_ckpt",
         )
     core_deg = (
         edges.select(F.col("pa").alias("n"))
@@ -1328,7 +1312,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree table grows with the graph), the Jaccard division is
     IEEE-deterministic from exact integer counts, and top-k is
     TakeOrderedAndProject."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
     res = jaccard_linkpred_scores(edges, max_deg=_LINKPRED_MAX_DEG)
     return res.orderBy(F.desc("jaccard"), "node_a", "node_b").limit(_LINKPRED_TOPK)
 
@@ -1452,13 +1436,13 @@ def assortativity_from_edges(raw_edges: DataFrame) -> DataFrame:
     """Assortativity core over any (pa, pb) undirected edge frame —
     factored out so tests can pin known-shape graphs (a star is exactly
     r = -1; a clique's variance degenerates)."""
-    edges = raw_edges.persist(CKPT_LEVEL)  # feeds deg + both joins
-    deg = (
+    edges = memory.cut(raw_edges, "persist")  # feeds deg + both joins
+    deg = memory.cut(
         edges.select(F.col("pa").alias("n"))
         .unionAll(edges.select(F.col("pb").alias("n")))
         .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .persist(CKPT_LEVEL)  # feeds the node count and two degree joins
+        .agg(F.count(F.lit(1)).cast("long").alias("d")),
+        "persist",  # feeds the node count and two degree joins
     )
     da = deg.select(F.col("n").alias("pa"), F.col("d").alias("x"))
     db = deg.select(F.col("n").alias("pb"), F.col("d").alias("y"))
@@ -1545,8 +1529,6 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — both hash-partitioned on the join key (bucket the edge
     table at cluster scale and the static side never reshuffles) — plus
     one aggregate. The final top-k is TakeOrderedAndProject."""
-    from pyspark import StorageLevel
-
     lineitem = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # persist(), not localCheckpoint(): four rounds reuse this table, and
@@ -1554,11 +1536,11 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpoint path pinned DESERIALIZED row objects, which at sf10
     # (tens of millions of 2-long edges) was most of the 8 GiB heap the
     # r11 sweep OOM'd on (VERDICT r11 task #4).
-    edges = (
+    edges = memory.cut(
         lineitem.join(orders, lineitem["l_orderkey"] == orders["o_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(),
+        "persist",
     )
     h1 = edges.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("h1"))
     a1 = (
@@ -1656,26 +1638,26 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the degree-oriented wedge join bounds fan-out by sqrt(2m)
     (Suri & Vassilvitskii); per-node credit is one explode + groupBy on
     triangle rows (≤ wedge count); everything else is node-grain."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
-    deg = (
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
+    deg = memory.cut(
         edges.select(F.col("pa").alias("n"))
         .unionAll(edges.select(F.col("pb").alias("n")))
         .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .persist(CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).cast("long").alias("d")),
+        "persist",
     )
     is_fwd = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
     )
-    ed = (
+    ed = memory.cut(
         edges.join(deg.withColumnRenamed("n", "pa").withColumnRenamed("d", "da"), "pa")
         .join(deg.withColumnRenamed("n", "pb").withColumnRenamed("d", "db"), "pb")
         .select(
             F.when(is_fwd, F.col("pa")).otherwise(F.col("pb")).alias("src"),
             F.when(is_fwd, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
             F.greatest("da", "db").alias("deg_dst"),
-        )
-        .persist(CKPT_LEVEL)
+        ),
+        "persist",
     )
     w1, w2 = ed.alias("w1"), ed.alias("w2")
     wedges = w1.join(
@@ -1691,9 +1673,9 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("w1.src").alias("wsrc"), F.col("w1.dst").alias("ta"), F.col("w2.dst").alias("tb")
     )
-    closed = wedges.join(
+    closed = memory.cut(wedges.join(
         ed.select(F.col("src").alias("ta"), F.col("dst").alias("tb")), ["ta", "tb"], "leftsemi"
-    ).persist(CKPT_LEVEL)
+    ), "persist")
 
     tcount = (
         closed.select(F.explode(F.array("wsrc", "ta", "tb")).alias("n"))
@@ -1801,7 +1783,7 @@ def graph_bounded_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is ONE hash join of the frontier against the
     node-keyed directed edge list followed by a min-aggregate — never a
-    broadcast of unbounded state — with a lazy `persist(CKPT_LEVEL)` cut
+    broadcast of unbounded state — with a lazy `persist` cut
     per round (safe here: each round references its predecessor ONCE, so
     the un-truncated logical plan grows linearly, r12 §11). Rounds are a fixed
     constant, so the plan is 4 joins deep, not data-dependent."""
@@ -1823,11 +1805,11 @@ def graph_bounded_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("support"))
         .where(F.col("support") >= _TRI_MIN_SUPPORT)
     )
-    edges = edges.persist(CKPT_LEVEL)
-    dir_e = (
+    edges = memory.cut(edges, "persist")
+    dir_e = memory.cut(
         edges.selectExpr("pa AS u", "pb AS v", f"{_SSSP_COST} AS w")
-        .unionAll(edges.selectExpr("pb AS u", "pa AS v", f"{_SSSP_COST} AS w"))
-        .persist(CKPT_LEVEL)
+        .unionAll(edges.selectExpr("pb AS u", "pa AS v", f"{_SSSP_COST} AS w")),
+        "persist",
     )
     src = edges.agg(F.min("pa").alias("s"))
     d = src.select(F.col("s").alias("node"), F.lit(0).cast("long").alias("dist"))
@@ -1835,13 +1817,13 @@ def graph_bounded_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         relaxed = d.join(dir_e, d.node == dir_e.u).select(
             F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        d = (
+        d = memory.cut(
             d.unionAll(relaxed)
             .groupBy("node")
-            .agg(F.min("dist").cast("long").alias("dist"))
+            .agg(F.min("dist").cast("long").alias("dist")),
             # persist lineage cut per round (r12): no build-time stage
             # execution, plans stay one round deep via cache substitution.
-            .persist(CKPT_LEVEL)
+            "persist",
         )
     return d.orderBy("dist", "node").limit(_SSSP_TOP)
 
@@ -1909,7 +1891,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
         .withColumn("_g", F.lit(1))
     )
-    hist = hist.persist(CKPT_LEVEL)  # feeds the total AND the running sum
+    hist = memory.cut(hist, "persist")  # feeds the total AND the running sum
     tot = hist.agg(F.sum("n_nodes").cast("long").alias("total"))
     cum = grouped_running_sum(hist, ["_g"], ["degree"], "n_nodes", "cum_nodes")
     return (
@@ -1992,7 +1974,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle replays the cap: it is part of the spec), candidates
     anti-join the edge set, degrees join on the node key, top-k is
     TakeOrderedAndProject."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
     adj = edges.select(F.col("pa").alias("n"), F.col("pb").alias("nbr")).unionAll(
         edges.select(F.col("pb").alias("n"), F.col("pa").alias("nbr"))
     )
@@ -2106,7 +2088,7 @@ def graph_harmonic_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator spec. One basket explode, one wedge explode, two key-hash
     aggregates; the direct-edge exclusion is an anti-join on the edge
     list. Nothing is corpus-quadratic."""
-    edges = cooccurrence_edges(spark, sf_dir).persist(CKPT_LEVEL)
+    edges = memory.cut(cooccurrence_edges(spark, sf_dir), "persist")
     adj = edges.select(F.col("pa").alias("n"), F.col("pb").alias("nbr")).unionAll(
         edges.select(F.col("pb").alias("n"), F.col("pa").alias("nbr"))
     )

@@ -24,7 +24,7 @@ over unbounded rows.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -831,7 +831,7 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13 A/B: lazy 0.96 ≈ persist 0.98 < eager 1.19 (count, best-of-3)
     # — persist kept (tied with lazy, no build-time stage execution).
-    cells = cells.persist(CKPT_LEVEL)
+    cells = memory.cut(cells, "persist")
     ranked = grouped_running_sum(cells, ["g"], ["v"], "n_gv", "cum")
     n_g_df = cells.groupBy("g").agg(F.sum("n_gv").cast("long").alias("n_g"))
     med = (
@@ -1131,7 +1131,7 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one data-scale groupBy to the types×4 grid; marginals are
     broadcast re-aggregations of that bounded grid."""
     events = load(spark, sf_dir, "events")
-    cells = (
+    cells = memory.cut(
         events.select(
             "event_type",
             (
@@ -1140,8 +1140,8 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("grp"),
         )
         .groupBy("event_type", "grp")
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        .persist(CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).cast("long").alias("o")),
+        "persist",
     )
     rt = cells.groupBy("event_type").agg(F.sum("o").cast("decimal(38,0)").alias("rt"))
     ct = cells.groupBy("grp").agg(F.sum("o").cast("decimal(38,0)").alias("ct"))
@@ -1314,26 +1314,26 @@ def stats_multiple_testing_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("q2"),
     )
-    scored = m.selectExpr(
+    scored = memory.cut(m.selectExpr(
         "event_type",
         "n1",
         "n2",
         f"round({_BH_Z}, 6) AS z",
         f"{_BH_P} AS p_value",
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     tot = scored.agg(F.count(F.lit(1)).cast("long").alias("n_tests"))
     b = scored.select(
         F.col("p_value").alias("bp"), F.col("event_type").alias("bt")
     )
-    ranked = (
+    ranked = memory.cut(
         scored.join(
             F.broadcast(b),
             (F.col("bp") < F.col("p_value"))
             | ((F.col("bp") == F.col("p_value")) & (F.col("bt") <= F.col("event_type"))),
         )
         .groupBy("event_type", "n1", "n2", "z", "p_value")
-        .agg(F.count(F.lit(1)).cast("long").alias("p_rank"))
-        .persist(CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).cast("long").alias("p_rank")),
+        "persist",
     )
     cutoff = ranked.crossJoin(F.broadcast(tot)).agg(
         F.coalesce(
@@ -1783,7 +1783,7 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_g").alias("n_b"),
         F.col("r2_g").alias("r2_b"),
     )
-    scored = (
+    scored = memory.cut(
         a.join(F.broadcast(b), F.col("g_a") < F.col("g_b"))
         .crossJoin(F.broadcast(nn))
         .crossJoin(F.broadcast(ties))
@@ -1794,8 +1794,8 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_b",
             f"round({_DUNN_Z}, 6) AS z",
             f"{_DUNN_P} AS p_value",
-        )
-        .persist(CKPT_LEVEL)
+        ),
+        "persist",
     )
     tot = scored.agg(F.count(F.lit(1)).cast("long").alias("n_tests"))
     rhs = scored.select(
@@ -1916,7 +1916,7 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("date").alias("day"),
         F.col("event_type").alias("g"),
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    daily = daily.persist(CKPT_LEVEL)  # feeds days, types, and the grid join
+    daily = memory.cut(daily, "persist")  # feeds days, types, and the grid join
     days = daily.select("day").distinct()
     types = daily.select("g").distinct()
     grid = (
@@ -1933,7 +1933,7 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "g",
         (2 * (F.col("cum") - F.col("n_v")) + F.col("n_v") + 1).cast("long").alias("r2"),
     )
-    r2 = r2.persist(CKPT_LEVEL)  # feeds per_g AND the Σr2² fold
+    r2 = memory.cut(r2, "persist")  # feeds per_g AND the Σr2² fold
     per_g = r2.groupBy("g").agg(F.sum("r2").cast("long").alias("r2_g"))
     consts = days.agg(F.count(F.lit(1)).cast("long").alias("b")).crossJoin(
         types.agg(F.count(F.lit(1)).cast("long").alias("k"))
@@ -2155,7 +2155,7 @@ def stats_median_ci_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13 A/B: lazy ckpt 0.71 < persist 0.80 < eager 0.92 (count,
     # best-of-3) — the r12 persist regression reverted to the r11 form.
-    d = d.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)  # feeds the total AND the running rank
+    d = memory.cut(d, "lazy_ckpt")  # feeds the total AND the running rank
     r = grouped_running_sum(d, ["_g"], ["v"], "nv", "cum").select("v", "nv", "cum")
     ranks = d.agg(F.sum("nv").cast("long").alias("n")).selectExpr(
         "n",
@@ -2250,14 +2250,14 @@ def stats_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviations reweight the EXISTING cells (z carries n_gv), so the
     corpus is never re-scanned."""
     events = load(spark, sf_dir, "events")
-    cells = (
+    cells = memory.cut(
         events.select(
             F.col("event_type").alias("g"),
             F.round(F.col("value") * 100).cast("long").alias("v"),
         )
         .groupBy("g", "v")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_gv"))
-        .persist(CKPT_LEVEL)  # feeds cum, gn, and the z fold
+        .agg(F.count(F.lit(1)).cast("long").alias("n_gv")),
+        "persist",  # feeds cum, gn, and the z fold
     )
     cum = grouped_running_sum(cells, ["g"], ["v"], "n_gv", "cum").select("g", "v", "cum")
     gn = cells.groupBy("g").agg(F.sum("n_gv").cast("long").alias("n_g"))

@@ -23,7 +23,7 @@ bytes never leave the executor, only fixed-width metadata shuffles.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from collections.abc import Iterator
 
@@ -716,9 +716,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     payloads = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    hashes = payloads.mapInPandas(make_phash_batch(), PHASH_SCHEMA).localCheckpoint(
-        eager=True, storageLevel=CKPT_LEVEL
-    )
+    hashes = memory.cut(payloads.mapInPandas(make_phash_batch(), PHASH_SCHEMA), "eager_ckpt")
     bands = hashes.select(
         "doc_id",
         "phash",
@@ -824,10 +822,10 @@ def multimodal_payload_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(hash) and one 16-shard rollup. The payload COLUMN never
     moves — the shape that works when blobs are megabytes."""
     docs = load(spark, sf_dir, "documents")
-    payloads = docs.select(
+    payloads = memory.cut(docs.select(
         F.sha2(F.col("text"), 256).alias("h"),
         F.octet_length(F.col("text")).cast("long").alias("b"),
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     raw = payloads.groupBy(F.substring("h", 1, 1).alias("shard")).agg(
         F.count(F.lit(1)).cast("long").alias("n_payloads"),
         F.sum("b").cast("long").alias("bytes_total"),

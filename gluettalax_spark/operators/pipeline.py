@@ -7,7 +7,7 @@ explode + count), which is what keeps them linear at 100 TB.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -459,15 +459,14 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     each customer row explodes map-side into three (tag, sortval,
     custkey) rows — DESC metrics negate their integer sort value, so
     (sortval ASC, custkey ASC) reproduces each oracle window's order
-    exactly (monetary is 2-dp decimal, so cents = monetary·100 is an
-    exact long) — and the global rank over (tag, sortval, custkey)
+    exactly (monetary is a DOUBLE rounded to 2 dp, so its cents are the
+    ROUNDED monetary·100: 0.29·100 is 28.999…96 and would truncate onto
+    0.28's 28) — and the global rank over (tag, sortval, custkey)
     yields each metric's in-tag rank as rn − tag·N (every tag block
     holds exactly N = _n/3 rows). One range exchange of three narrow
     rows per customer, ONE isolation checkpoint, one pivot aggregate;
     ranks (hence quartiles) stay total-order exact and the oracle keeps
     the one-window SQL form."""
-    from gluettalax_spark.memory import multi_cut
-
     orders = load(spark, sf_dir, "orders")
     anchor = F.lit("2002-01-01 00:00:00").cast("timestamp")
     base = orders.groupBy("o_custkey").agg(
@@ -475,7 +474,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         F.round(F.sum("o_totalprice"), 2).alias("monetary"),
     )
-    base = multi_cut(base)  # feeds the tagged explode AND the value join
+    base = memory.cut(base, "persist")  # feeds the tagged explode AND the value join
     tagged = base.select(
         "o_custkey",
         F.explode(
@@ -490,7 +489,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 F.struct(
                     F.lit(2).cast("long").alias("tag"),
-                    (-(F.col("monetary") * 100)).cast("long").alias("sortval"),
+                    (-F.round(F.col("monetary") * 100)).cast("long").alias("sortval"),
                 ),
             )
         ).alias("_t"),
@@ -1040,14 +1039,14 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the oracle, so collisions — ~n²/2⁶¹ — cannot cause a mismatch)."""
     from gluettalax_spark.operators.dedup import shingles_exploded
 
-    hs = (
+    hs = memory.cut(
         shingles_exploded(spark, sf_dir, carry=("source",))
         .select(
             "source",
             F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").alias("hs"),
         )
-        .distinct()
-        .persist(CKPT_LEVEL)  # feeds per-source counts AND the pair sets
+        .distinct(),
+        "persist",  # feeds per-source counts AND the pair sets
     )
     per_src = hs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     sets = (
@@ -1224,20 +1223,20 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE scan + ONE shuffle: the deduped per-order basket array feeds
     # pair candidates, per-item counts, and the basket total (frozen so
     # the three consumers don't re-run the aggregation).
-    baskets = (
+    baskets = memory.cut(
         li.groupBy(F.col("l_orderkey").alias("o"))
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .filter(F.size("ps") <= MAX_BASKET)
-        .persist(CKPT_LEVEL)
+        .filter(F.size("ps") <= MAX_BASKET),
+        "persist",
     )
     n_tot = baskets.agg(F.count(F.lit(1)).alias("N"))
-    icnt = (
+    icnt = memory.cut(
         baskets.select(F.explode("ps").alias("part"))
         .groupBy("part")
-        .agg(F.count(F.lit(1)).alias("n_i"))
-        .persist(CKPT_LEVEL)  # feeds BOTH metric joins (ia and ib)
+        .agg(F.count(F.lit(1)).alias("n_i")),
+        "persist",  # feeds BOTH metric joins (ia and ib)
     )
-    pairs = (
+    pairs = memory.cut(
         baskets.select(
             F.explode(
                 F.expr(
@@ -1249,8 +1248,8 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("e.pa", "e.pb")
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("n_ab"))
-        .where(F.col("n_ab") >= _RULES_MIN_PAIR)
-        .persist(CKPT_LEVEL)  # feeds both halves of the directed union
+        .where(F.col("n_ab") >= _RULES_MIN_PAIR),
+        "persist",  # feeds both halves of the directed union
     )
     directed = pairs.select(
         F.col("pa").alias("part_a"), F.col("pb").alias("part_b"), "n_ab"
@@ -1567,14 +1566,14 @@ def temperature_weights(docs: DataFrame) -> DataFrame:
     factored out so tests can drive it on synthetically skewed corpora
     (the fixture's sources are uniform, which never exercises the
     rare-source boost)."""
-    per_source = (
+    per_source = memory.cut(
         docs.groupBy("source")
         .agg(F.count("*").cast("long").alias("n_docs"))
         .withColumn(
             "q",
             F.expr("cast(floor(sqrt(cast(n_docs as double)) * 1048576) as bigint)"),
-        )
-        .persist(CKPT_LEVEL)  # feeds both the 1-row total and the final join
+        ),
+        "persist",  # feeds both the 1-row total and the final join
     )
     tot = per_source.agg(
         F.sum("n_docs").cast("long").alias("n_total"),
@@ -2008,15 +2007,15 @@ def orders_demand_variability_xyz(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("p", "mi")
         .agg(F.sum("q0").cast("long").alias("q"))
     )
-    per_part = (
+    per_part = memory.cut(
         demand.groupBy("p")
         .agg(
             F.sum("q").cast("long").alias("s"),
             F.sum(F.col("q").cast("decimal(38,0)") * F.col("q")).alias("qq"),
             F.min("mi").alias("plo"),
             F.max("mi").alias("phi"),
-        )
-        .persist(CKPT_LEVEL)  # feeds the 1-row bounds AND the moments
+        ),
+        "persist",  # feeds the 1-row bounds AND the moments
     )
     bounds = per_part.agg(F.min("plo").alias("lo"), F.max("phi").alias("hi"))
     moments = per_part.crossJoin(F.broadcast(bounds)).select(
@@ -2263,25 +2262,25 @@ ORDER BY source
 """
 
 
-from gluettalax_spark.memory import register_session_df_cache
-
-_LOGITS_CACHE: dict[tuple[str, str], DataFrame] = register_session_df_cache({})
-
-
 def classifier_doc_logits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, n_feats, logit_milli) — the per-document scores
     behind `quality_classifier_linear`, exposed for composite
     diagnostics (`quality_signal_agreement`, `quality_classifier_auc`).
     Integer-exact.
 
-    Memoized per (application, corpus dir) as a localCheckpointed frame:
-    three registry ops score the same corpus, and the unigram+bigram
-    explode is the dominant cost of each — the build/search split the
-    ANN codebooks and the covariance pass already use (checkpoint blocks
-    die with the session, hence the applicationId in the key)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LOGITS_CACHE:
-        return _LOGITS_CACHE[key]
+    Memoized per (application, corpus dir) as a cached frame: three
+    registry ops score the same corpus, and the unigram+bigram explode
+    is the dominant cost of each — the build/search split the ANN
+    codebooks and the covariance pass already use (cached blocks die
+    with the session, hence the applicationId in the key)."""
+    return memory.memo(
+        "classifier-logits",
+        (spark.sparkContext.applicationId, sf_dir),
+        lambda: _score_docs(spark, sf_dir),
+    )
+
+
+def _score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
@@ -2307,19 +2306,12 @@ def classifier_doc_logits(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" * {_QC_KNUTH}) % {_QC_WRANGE} - {_QC_WRANGE // 2}"
         ).alias("wgt"),
     )
-    out = scored_feat.groupBy("doc_id", "source").agg(
+    return memory.cut(scored_feat.groupBy("doc_id", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n_feats"),
         F.expr("CAST(CAST(sum(wgt) AS BIGINT) * 1000 div count(*) AS BIGINT)").alias(
             "logit_milli"
         ),
-    ).persist(CKPT_LEVEL)
-    # Bounded memo: keep only the latest (app, corpus dir) so a
-    # long-lived session touching many corpus dirs doesn't pin a
-    # checkpoint block per dir (dropping our reference lets Spark's
-    # ContextCleaner unpersist the old blocks).
-    _LOGITS_CACHE.clear()
-    _LOGITS_CACHE[key] = out
-    return out
+    ), "persist")
 
 
 @register(
@@ -2467,9 +2459,9 @@ def events_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "is_purchase", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    pathed = tagged.withColumn(
+    pathed = memory.cut(tagged.withColumn(
         "path_id", (F.sum("is_purchase").over(w_path) - F.col("is_purchase")).cast("long")
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     purchases = pathed.filter(F.col("is_purchase") == 1).select("user_id", "path_id")
     w_pos = Window.partitionBy("user_id", "path_id").orderBy("ts", "event_id")
     w_n = Window.partitionBy("user_id", "path_id")
@@ -2652,7 +2644,7 @@ def quality_signal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     grid = tiled.groupBy("b_cls", "b_ppl").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    grid = grid.persist(CKPT_LEVEL)
+    grid = memory.cut(grid, "persist")
     rowm = grid.groupBy(F.col("b_cls").alias("t")).agg(F.sum("n").alias("rn"))
     colm = grid.groupBy(F.col("b_ppl").alias("t")).agg(F.sum("n").alias("cn"))
     pe = rowm.join(colm, "t").agg(
@@ -2785,7 +2777,7 @@ def quality_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, _, quality = _quality_parts()
     q = docs.select("doc_id", F.round(quality * 10000).cast("long").alias("q_int"))
     logits = classifier_doc_logits(spark, sf_dir).select("doc_id", "logit_milli")
-    j = logits.join(q, "doc_id").persist(CKPT_LEVEL)
+    j = memory.cut(logits.join(q, "doc_id"), "persist")
 
     # Lower median off the BOUNDED quality dictionary (quality quantizes
     # to 1e4 steps, so the dictionary is ≤ 10,001 rows at any corpus
@@ -3149,7 +3141,7 @@ def corpus_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is source-dictionary-scale with one 1-row total
     broadcast.""".replace("{mult}", str(_EPOCH_BUDGET_X))
     docs = load(spark, sf_dir, "documents")
-    per_source = (
+    per_source = memory.cut(
         docs.select(
             "source",
             F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("t"),
@@ -3159,8 +3151,8 @@ def corpus_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "qs",
             F.expr("CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) * 1048576) AS BIGINT)"),
-        )
-        .persist(CKPT_LEVEL)  # feeds the 1-row total AND the schedule
+        ),
+        "persist",  # feeds the 1-row total AND the schedule
     )
     tot = per_source.agg(
         F.sum("n_tokens").cast("long").alias("n_total"),
@@ -3313,7 +3305,7 @@ def orders_basket_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
         .withColumn("_g", F.lit(1))
     )
-    h = h.persist(CKPT_LEVEL)  # feeds the total AND the running sum
+    h = memory.cut(h, "persist")  # feeds the total AND the running sum
     t = h.agg(F.sum("n_orders").cast("long").alias("total"))
     cum = grouped_running_sum(h, ["_g"], ["basket_size"], "n_orders", "cum_orders")
     return (
@@ -3396,14 +3388,14 @@ def orders_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = exact_global_rank(cust, [F.col("cents").asc(), F.col("c").asc()], "rn")
     tiled = ranked.withColumn("decile", ntile_from_rank(F.col("rn"), F.col("_n"), 10))
-    dec = (
+    dec = memory.cut(
         tiled.groupBy("decile")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_customers"),
             F.sum("cents").cast("long").alias("decile_cents"),
         )
-        .withColumn("_g", F.lit(1))
-        .persist(CKPT_LEVEL)  # 10 rows; feeds total AND the curve
+        .withColumn("_g", F.lit(1)),
+        "persist",  # 10 rows; feeds total AND the curve
     )
     tot = dec.agg(F.sum("decile_cents").cast("long").alias("total"))
     from gluettalax_spark.operators.rank import grouped_running_sum

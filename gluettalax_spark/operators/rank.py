@@ -41,7 +41,7 @@ Used by ``window_ntile_distribution``, ``customer_rfm_segments`` and
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -96,7 +96,7 @@ def exact_global_rank(
     # for plan-shape tests that need to inspect the subtree; production
     # callers must never pass it.
     if isolate:
-        with_pid = with_pid.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        with_pid = memory.cut(with_pid, "lazy_ckpt")
 
     # Offsets: one row per range partition (≤ npart rows — config-bounded,
     # so the single-partition prefix-sum window here is metadata-scale,
@@ -159,7 +159,7 @@ def grouped_running_sum(
     # one materialized run rather than two re-planned executions of the
     # range exchange.
     if isolate:
-        with_pid = with_pid.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        with_pid = memory.cut(with_pid, "lazy_ckpt")
 
     w_off = (
         Window.partitionBy(*group_cols)
@@ -221,7 +221,7 @@ def grouped_running_sums(
     )
     with_pid = part.withColumn("_pid", F.spark_partition_id())
     if isolate:
-        with_pid = with_pid.localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
+        with_pid = memory.cut(with_pid, "lazy_ckpt")
 
     w_off = (
         Window.partitionBy(*group_cols)

@@ -9,7 +9,7 @@ the reference's fetch-all-then-filter loops.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -255,15 +255,15 @@ def part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: prices quantize to integer cents; the frontier is a set
     of exact comparisons — no floats anywhere in the decision."""
     part = load(spark, sf_dir, "part")
-    pts = part.select(
+    pts = memory.cut(part.select(
         "p_partkey",
         "p_size",
         F.round(F.col("p_retailprice") * 100).cast("long").alias("price_cents"),
-    ).persist(CKPT_LEVEL)
-    size_min = (
+    ), "persist")
+    size_min = memory.cut(
         pts.groupBy("p_size")
-        .agg(F.min("price_cents").alias("min_price"))
-        .persist(CKPT_LEVEL)
+        .agg(F.min("price_cents").alias("min_price")),
+        "persist",
     )
     # strict-prefix min over larger sizes, on the bounded size dictionary
     b = size_min.select(F.col("p_size").alias("bs"), F.col("min_price").alias("bp"))

@@ -10,7 +10,7 @@ lives inside Glue job scripts. Everything here is built-in
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -492,9 +492,9 @@ def json_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = events.agg(
         F.expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2").alias("mid")
     )
-    tagged = events.crossJoin(F.broadcast(bounds)).select(
+    tagged = memory.cut(events.crossJoin(F.broadcast(bounds)).select(
         F.when(F.unix_micros("ts") < F.col("mid"), 0).otherwise(1).alias("half"), "props"
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     halves = tagged.groupBy("half").agg(F.count(F.lit(1)).cast("long").alias("n"))
     h = halves.agg(
         F.max(F.when(F.col("half") == 0, F.col("n"))).cast("long").alias("n_early"),

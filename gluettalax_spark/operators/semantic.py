@@ -45,7 +45,7 @@ surface the brief adds on top (SURVEY.md §2 F-north).
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -341,9 +341,7 @@ def semantic_dedup(
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     a1 = assign_clusters(emb, _seed_centroids(load(spark, sf_dir, "embeddings")))
     qe = F.expr(f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * {QSCALE}.0) AS BIGINT))")
-    members = a1.select(
-        "vec_id", "cluster_id", qe.alias("qe")
-    ).persist(CKPT_LEVEL)
+    members = memory.cut(a1.select("vec_id", "cluster_id", qe.alias("qe")), "persist")
 
     kept, star, _spill = _cap_band_buckets(members, ["cluster_id"], "vec_id", max_bucket)
 

@@ -12,7 +12,7 @@ plan and swap in pre-trained IVF centroids as the bucketer.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -215,10 +215,10 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8×64-term projection per consumer — measured ~2× on the full query.
     # Norm rides along the checkpoint: computed once per vector, never
     # per candidate pair (identical float result, same fold order).
-    buckets = (
+    buckets = memory.cut(
         emb.selectExpr("vec_id", "embedding", f"{bucket} AS bucket")
-        .withColumn("nrm", _norm(F.col("embedding")))
-        .persist(CKPT_LEVEL)  # lazy multi-consumer cut (r12): no build-time job
+        .withColumn("nrm", _norm(F.col("embedding"))),
+        "persist",  # lazy multi-consumer cut (r12): no build-time job
     )
     q = buckets.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -345,16 +345,16 @@ def embedding_neardup(spark: SparkSession, sf_dir: str, max_bucket: int = 512) -
     bucket = _bucket_expr(_plane_coeff_spark, lambda d: f"element_at(embedding, {d + 1})")
     # Both join sides read the bucketed table; materialize the 8×64-term
     # projection once (cluster analog: persist the bucket-keyed index).
-    buckets = (
+    buckets = memory.cut(
         emb.selectExpr("vec_id", "embedding", f"{bucket} AS bucket")
-        .withColumn("nrm", _norm(F.col("embedding")))
+        .withColumn("nrm", _norm(F.col("embedding"))),
         # EAGER localCheckpoint (r13 A/B, VERDICT r12 #1): builder+count
         # best-of-3 eager 1.42 s vs lazy 1.67 s vs persist 1.97 s vs
         # none 2.54 s — the r12 persist regression reverted. The 4-5
         # consumers (cap probe + both clique sides + both star sides)
         # each re-canonicalize the 8x64-term bucket expression under
         # persist; ExistingRDD plans don't.
-        .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
+        "eager_ckpt",
     )
     kept, star, _spill = _cap_band_buckets(buckets, ["bucket"], "vec_id", max_bucket)
     a = kept.select(
@@ -896,9 +896,9 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(x, w) -> x * w), 0D, (acc, t) -> acc + t)"
         )
 
-    scored = emb.select(
+    scored = memory.cut(emb.select(
         "vec_id", *[F.round(score_expr(k), 6).alias(f"pc{k + 1}") for k in range(PCA_K)]
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     stats = scored.agg(F.round(F.var_pop("pc1"), 6).alias("var_pc1"))
     return (
         scored.orderBy(F.desc(F.abs(F.col("pc1"))), F.asc("vec_id"))
@@ -977,14 +977,14 @@ def centroid_outliers(emb: DataFrame, topk: int = OUTLIER_TOPK) -> DataFrame:
     """Centroid-outlier core over any (label, vec_id, embedding) frame —
     factored out so tests can drive it on a synthetic cluster with one
     injected far-away vector."""
-    qe = emb.select(
+    qe = memory.cut(emb.select(
         "label",
         "vec_id",
         F.expr(f"transform(embedding, v -> CAST(floor(v * {COV_Q}) AS BIGINT))").alias("qv"),
         # r13 A/B: eager ckpt 0.67 s ≈ lazy 0.69 ≈ persist 0.71 (count,
         # best-of-3) — the r12 persist regression was position noise at
         # this size; eager kept as the (slightly) fastest + r11 form.
-    ).localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
+    ), "eager_ckpt")
     per_coord = (
         qe.select("label", F.posexplode("qv").alias("i", "x"))
         .groupBy("label", "i")

@@ -10,7 +10,7 @@ they're covered by a unit test against numpy instead.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1502,11 +1502,11 @@ def cusum_daily_changepoints(events: DataFrame) -> DataFrame:
     """CUSUM change-point core over an events frame with (event_type,
     ts) columns — factored out so tests can drive it on synthetic
     step-function series with a known shift day."""
-    counts = (
+    counts = memory.cut(
         events.select("event_type", F.date_trunc("day", "ts").alias("day"))
         .groupBy("event_type", "day")
-        .agg(F.count("*").cast("long").alias("x"))
-        .persist(CKPT_LEVEL)  # feeds bounds, the type list, AND the dense join
+        .agg(F.count("*").cast("long").alias("x")),
+        "persist",  # feeds bounds, the type list, AND the dense join
     )
     bounds = counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     days = bounds.select(
@@ -1737,10 +1737,10 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-agg per day. The conditional DAU rides the same aggregate
     (no second pass)."""
     events = load(spark, sf_dir, "events")
-    pairs = (
+    pairs = memory.cut(
         events.select(F.date_trunc("day", "ts").alias("day"), "user_id")
-        .distinct()
-        .persist(CKPT_LEVEL)  # feeds the day list AND the contribution explode
+        .distinct(),
+        "persist",  # feeds the day list AND the contribution explode
     )
     days = pairs.select("day").distinct()
     contrib = pairs.select(
@@ -2832,21 +2832,18 @@ def events_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant regex probes map-side over the (user, string) table and a
     patterns-sized aggregate. Nothing all-pairs, no window."""
     events = load(spark, sf_dir, "events")
-    seqs = (
-        events.select(
-            "user_id",
-            F.struct("ts", "event_id", F.expr(_seq_char_case("event_type")).alias("ch")).alias(
-                "rec"
-            ),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.expr("concat_ws('', transform(array_sort(collect_list(rec)), r -> r.ch))").alias(
-                "s"
-            )
-        )
-        .persist(CKPT_LEVEL)
+    seqs = memory.cut(events.select(
+        "user_id",
+        F.struct("ts", "event_id", F.expr(_seq_char_case("event_type")).alias("ch")).alias(
+            "rec"
+        ),
     )
+    .groupBy("user_id")
+    .agg(
+        F.expr("concat_ws('', transform(array_sort(collect_list(rec)), r -> r.ch))").alias(
+            "s"
+        )
+    ), "persist")
     tot = seqs.agg(F.count(F.lit(1)).cast("long").alias("n_users"))
     per_pattern = [
         seqs.agg(
@@ -3613,7 +3610,7 @@ def stats_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("_g", F.lit(1))
     )
-    vals = vals.persist(CKPT_LEVEL)  # feeds totals + running-sums pass
+    vals = memory.cut(vals, "persist")  # feeds totals + running-sums pass
     cum = grouped_running_sums(
         vals, ["_g"], ["v"], [("c1", "cum1"), ("c2", "cum2")]
     ).select("v", "cum1", "cum2")
@@ -3715,7 +3712,7 @@ def stats_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("_g", F.lit(1))
     )
-    vals = vals.persist(CKPT_LEVEL)  # totals + running-sums pass
+    vals = memory.cut(vals, "persist")  # totals + running-sums pass
     tot = vals.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),

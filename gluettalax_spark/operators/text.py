@@ -9,7 +9,7 @@ loop, so these run at full codegen speed over 100 TB of text.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2288,7 +2288,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("c"))
         .select(F.concat(F.col("w"), F.lit(">")).alias("w"), "c")
     )
-    cur = freq.select(
+    cur = memory.cut(freq.select(
         "w",
         "c",
         F.concat(
@@ -2296,7 +2296,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.expr("regexp_extract_all(w, '.', 0)"), "  "),
             F.lit("  "),
         ).alias("sym"),
-    ).localCheckpoint(storageLevel=CKPT_LEVEL)
+    ), "eager_ckpt")
 
     out: DataFrame | None = None
     for rnd in range(1, BPE_TRAIN_ROUNDS + 1):
@@ -2314,11 +2314,11 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("c", "p.l", "p.r")
         )
-        best = (
+        best = memory.cut(
             pairs.groupBy("l", "r")
             .agg(F.sum("c").cast("long").alias("score"))
             .orderBy(F.desc("score"), "l", "r")
-            .limit(1)
+            .limit(1),
             # EAGER localCheckpoint (r13 A/B, VERDICT r12 #1): persist is
             # catastrophic here (50 s in the r13 baseline capture — the
             # un-truncated round-over-round replace() plan re-derives
@@ -2327,9 +2327,9 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Each round's frames are consumed by the NEXT round's
             # stages at lazy-call time anyway; eager materializes once,
             # cleanly, per round.
-            .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
+            "eager_ckpt",
         )
-        cur = (
+        cur = memory.cut(
             cur.crossJoin(F.broadcast(best.select("l", "r")))
             .select(
                 "w",
@@ -2337,8 +2337,8 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(
                     "replace(sym, concat(' ', l, '  ', r, ' '), concat(' ', l, r, ' '))"
                 ).alias("sym"),
-            )
-            .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
+            ),
+            "eager_ckpt",
         )
         stats = cur.agg(
             F.sum(F.col("c") * F.size(F.expr(_SYMS))).cast("long").alias("tokens_after")
@@ -2549,10 +2549,10 @@ def js_divergence_by_source(docs: DataFrame) -> DataFrame:
         "source",
         F.explode(F.expr(r"regexp_extract_all(lower(text), '[a-z]+', 0)")).alias("w"),
     )
-    sc = (
+    sc = memory.cut(
         tok.groupBy("source", "w")
-        .agg(F.count("*").cast("long").alias("c"))
-        .persist(CKPT_LEVEL)  # feeds vocab totals, source totals, and the grid join
+        .agg(F.count("*").cast("long").alias("c")),
+        "persist",  # feeds vocab totals, source totals, and the grid join
     )
     vocab = sc.groupBy("w").agg(F.sum("c").cast("long").alias("cw"))
     srcs = sc.groupBy("source").agg(F.sum("c").cast("long").alias("ns"))
@@ -2687,13 +2687,13 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     |alphabet| x |sources| rows no matter the corpus size; everything
     after is metadata-scale."""
     docs = load(spark, sf_dir, "documents")
-    cc = (
+    cc = memory.cut(
         docs.select(
             "source", F.explode(F.expr("regexp_extract_all(text, '(?s).', 0)")).alias("ch")
         )
         .groupBy("source", "ch")
-        .agg(F.count("*").cast("long").alias("c"))
-        .persist(CKPT_LEVEL)  # feeds the total and the entropy fold
+        .agg(F.count("*").cast("long").alias("c")),
+        "persist",  # feeds the total and the entropy fold
     )
     tot = cc.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     term = F.expr(
@@ -3045,11 +3045,11 @@ def text_tfidf_source_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k window partitions by source over the vocab-bounded score
     table (Heaps' law — dictionary scale, not corpus scale)."""
     docs = load(spark, sf_dir, "documents")
-    words = docs.select(
+    words = memory.cut(docs.select(
         "doc_id",
         "source",
         F.explode(F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).alias("w"),
-    ).persist(CKPT_LEVEL)  # one materialized explode feeds df AND tf
+    ), "persist")  # one materialized explode feeds df AND tf
     dfreq = words.groupBy("w").agg(F.countDistinct("doc_id").cast("long").alias("dfreq"))
     nd = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     idf = dfreq.crossJoin(F.broadcast(nd)).select(
@@ -3367,15 +3367,15 @@ def text_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gluettalax_spark.operators.dedup import shingles_exploded
 
     sh = shingles_exploded(spark, sf_dir, carry=("source",))
-    occ = (
+    occ = memory.cut(
         sh.select(
             "doc_id",
             "source",
             F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").alias("h"),
         )
         .groupBy("doc_id", "source", "h")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .persist(CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt")),
+        "persist",
     )
     dup = (
         occ.groupBy("h")
@@ -3532,7 +3532,7 @@ def text_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic from (rank, per-lang total)."""
     from gluettalax_spark.operators.rank import grouped_running_sum, ntile_from_rank
 
-    scored = ppl_doc_keys(spark, sf_dir).persist(CKPT_LEVEL)
+    scored = memory.cut(ppl_doc_keys(spark, sf_dir), "persist")
     dict_df = scored.groupBy("lang", "key_nano").agg(
         F.count(F.lit(1)).cast("long").alias("n_k")
     )
@@ -3615,9 +3615,9 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate to the ≤ 6×6 grid; marginals are broadcast re-aggregations
     of that bounded grid (never a global window)."""
     pred = text_lang_id(spark, sf_dir)
-    cells = pred.groupBy("lang_true", "lang_pred").agg(
+    cells = memory.cut(pred.groupBy("lang_true", "lang_pred").agg(
         F.count(F.lit(1)).cast("long").alias("n")
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     rowm = cells.groupBy(F.col("lang_true").alias("c")).agg(
         F.sum("n").cast("long").alias("n_true")
     )
@@ -3736,7 +3736,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.trim(F.regexp_replace(F.col("raw"), " +", " ")).alias("phrase"),
     )
-    phrases = frags.filter(F.col("phrase") != "").persist(CKPT_LEVEL)
+    phrases = memory.cut(frags.filter(F.col("phrase") != ""), "persist")
     pw = phrases.select(
         "phrase",
         F.explode(F.split(F.col("phrase"), " ")).alias("w"),
@@ -3901,11 +3901,6 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-from gluettalax_spark.memory import register_session_df_cache
-
-_BPE_DICT_CACHE: dict[tuple[str, str], DataFrame] = register_session_df_cache({})
-
-
 def _bpe_apply_oracle(rounds: int) -> str:
     """DuckDB twin of `text_bpe_apply`: the same unrolled MATERIALIZED
     merge chain as `_bpe_train_oracle` (minus the per-round outputs),
@@ -3968,6 +3963,62 @@ ORDER BY s.source
     )
 
 
+def _bpe_dict(docs: DataFrame) -> DataFrame:
+    """(w, n_sym): every corpus word with its symbol count after the
+    trained merges — `text_bpe_train`'s merge loop without the
+    per-round outputs."""
+    words = docs.select(
+        F.explode(F.expr(r"regexp_extract_all(lower(text), '[a-z]+', 0)")).alias("w")
+    )
+    freq = (
+        words.groupBy("w")
+        .agg(F.count("*").cast("long").alias("c"))
+        .select(F.concat(F.col("w"), F.lit(">")).alias("w"), "c")
+    )
+    cur = memory.cut(freq.select(
+        "w",
+        "c",
+        F.concat(
+            F.lit("  "),
+            F.array_join(F.expr("regexp_extract_all(w, '.', 0)"), "  "),
+            F.lit("  "),
+        ).alias("sym"),
+    ), "persist")
+    for _ in range(BPE_TRAIN_ROUNDS):
+        pairs = (
+            cur.withColumn("syms", F.expr(_SYMS))
+            .filter(F.expr("size(syms) >= 2"))
+            .select(
+                "c",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(syms) - 1),"
+                        " i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))"
+                    )
+                ).alias("p"),
+            )
+            .select("c", "p.l", "p.r")
+        )
+        best = (
+            pairs.groupBy("l", "r")
+            .agg(F.sum("c").cast("long").alias("score"))
+            .orderBy(F.desc("score"), "l", "r")
+            .limit(1)
+        )
+        cur = memory.cut(
+            cur.crossJoin(F.broadcast(best.select("l", "r")))
+            .select(
+                "w",
+                "c",
+                F.expr(
+                    "replace(sym, concat(' ', l, '  ', r, ' '), concat(' ', l, r, ' '))"
+                ).alias("sym"),
+            ),
+            "lazy_ckpt",
+        )
+    return memory.cut(cur.select("w", F.size(F.expr(_SYMS)).cast("long").alias("n_sym")), "persist")
+
+
 @register(
     "text_bpe_apply",
     _bpe_apply_oracle(BPE_TRAIN_ROUNDS),
@@ -3996,65 +4047,9 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (application, corpus dir) — the classifier_doc_logits /
     # ANN-codebook build/search split; re-training is deterministic so
     # the cache only skips repeated work, never changes results.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    dict_df = _BPE_DICT_CACHE.get(key)
-    if dict_df is None:
-        words = docs.select(
-            F.explode(F.expr(r"regexp_extract_all(lower(text), '[a-z]+', 0)")).alias("w")
-        )
-        freq = (
-            words.groupBy("w")
-            .agg(F.count("*").cast("long").alias("c"))
-            .select(F.concat(F.col("w"), F.lit(">")).alias("w"), "c")
-        )
-        cur = freq.select(
-            "w",
-            "c",
-            F.concat(
-                F.lit("  "),
-                F.array_join(F.expr("regexp_extract_all(w, '.', 0)"), "  "),
-                F.lit("  "),
-            ).alias("sym"),
-        ).persist(CKPT_LEVEL)
-        for _ in range(BPE_TRAIN_ROUNDS):
-            pairs = (
-                cur.withColumn("syms", F.expr(_SYMS))
-                .filter(F.expr("size(syms) >= 2"))
-                .select(
-                    "c",
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(1, size(syms) - 1),"
-                            " i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))"
-                        )
-                    ).alias("p"),
-                )
-                .select("c", "p.l", "p.r")
-            )
-            best = (
-                pairs.groupBy("l", "r")
-                .agg(F.sum("c").cast("long").alias("score"))
-                .orderBy(F.desc("score"), "l", "r")
-                .limit(1)
-            )
-            cur = (
-                cur.crossJoin(F.broadcast(best.select("l", "r")))
-                .select(
-                    "w",
-                    "c",
-                    F.expr(
-                        "replace(sym, concat(' ', l, '  ', r, ' '), concat(' ', l, r, ' '))"
-                    ).alias("sym"),
-                )
-                .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
-            )
-        dict_df = cur.select(
-            "w", F.size(F.expr(_SYMS)).cast("long").alias("n_sym")
-        ).persist(CKPT_LEVEL)
-        # Bounded memo: latest (app, corpus dir) only — see
-        # classifier_doc_logits for the rationale.
-        _BPE_DICT_CACHE.clear()
-        _BPE_DICT_CACHE[key] = dict_df
+    dict_df = memory.memo(
+        "bpe-dict", (spark.sparkContext.applicationId, sf_dir), lambda: _bpe_dict(docs)
+    )
     src_freq = (
         docs.select(
             "source",
@@ -4143,14 +4138,14 @@ def text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     term-keyed against the 50-term broadcast. Zeros never materialize —
     the algebra counts them through N."""
     docs = load(spark, sf_dir, "documents")
-    term_doc = (
+    term_doc = memory.cut(
         docs.select(
             "doc_id",
             F.explode(F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).alias("w"),
         )
         .groupBy("w", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist(CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "persist",
     )
     totals = term_doc.groupBy("w").agg(F.sum("c").cast("long").alias("total"))
     top_terms = totals.orderBy(F.desc("total"), "w").limit(_BURST_TOP_TERMS)
@@ -4246,9 +4241,9 @@ def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything per-doc is JVM-side higher-order array work in the
     scan; the only shuffle is the per-source rollup of 2 longs."""
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
+    toks = memory.cut(docs.select(
         "source", F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)").alias("tk")
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     eligible = toks.filter(F.size("tk") >= _MATTR_W)
     per_doc = eligible.select(
         "source",
@@ -4345,7 +4340,7 @@ def text_token_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    vocab = vocab.persist(CKPT_LEVEL)  # feeds the rank AND the total
+    vocab = memory.cut(vocab, "persist")  # feeds the rank AND the total
     ranked = exact_global_rank(vocab, [F.col("c").desc(), F.col("w")], "r", keep_total=False)
     tot = vocab.agg(
         F.sum("c").cast("long").alias("n_total"),
@@ -4419,15 +4414,15 @@ def text_token_length_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (language × token-length) dictionary — ~40 cells per language —
     and everything after is dictionary-scale."""
     docs = load(spark, sf_dir, "documents")
-    ld = (
+    ld = memory.cut(
         docs.select(
             "lang",
             F.explode(F.expr(r"regexp_extract_all(lower(text), '[a-z]+', 0)")).alias("w"),
         )
         .select("lang", F.length("w").alias("l"))
         .groupBy("lang", "l")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist(CKPT_LEVEL)  # feeds the totals AND the entropy fold
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "persist",  # feeds the totals AND the entropy fold
     )
     tot = ld.groupBy("lang").agg(
         F.sum("c").cast("long").alias("n"),
@@ -4522,7 +4517,7 @@ def text_lang_trigram_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.expr("regexp_extract_all(lower(text), '(?s).', 0)").alias("chs"),
     ).select("doc_id", "lang", "chs", F.posexplode("chs").alias("pos", "ch"))
-    prof = (
+    prof = memory.cut(
         ch.filter(F.col("pos") <= F.size("chs") - 3)
         .select(
             "lang",
@@ -4533,8 +4528,8 @@ def text_lang_trigram_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("t3"),
         )
         .groupBy("lang", "t3")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist(CKPT_LEVEL)  # feeds norms AND both join sides
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "persist",  # feeds norms AND both join sides
     )
     norms = prof.groupBy("lang").agg(
         F.sum(F.col("c").cast("decimal(38,0)") * F.col("c")).cast("long").alias("c2"),
@@ -4705,7 +4700,7 @@ def text_source_lang_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("n_chars"),
     )
-    g = g.persist(CKPT_LEVEL)  # feeds all three marginals AND the output
+    g = memory.cut(g, "persist")  # feeds all three marginals AND the output
     ms = g.groupBy("source").agg(F.sum("n_docs").cast("long").alias("src_docs"))
     ml = g.groupBy("lang").agg(F.sum("n_docs").cast("long").alias("lang_docs"))
     t = g.agg(F.sum("n_docs").cast("long").alias("total"))

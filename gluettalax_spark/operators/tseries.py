@@ -19,7 +19,7 @@ exact sums, rounded for display — the repo-wide cross-engine recipe.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,33 +117,33 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-planned. Magnitude bound documented: |d_t| ≤ n·max_day +
     S ≈ 10⁹ at SF100, d² ≈ 10¹⁸, Σ ≈ 10²¹·lags ≪ 10³⁸."""
     orders = load(spark, sf_dir, "orders")
-    daily = (
+    daily = memory.cut(
         orders.select(F.col("o_orderdate").cast("date").alias("day"))
         .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .agg(F.count(F.lit(1)).cast("long").alias("x")),
+        "persist",
     )
     bounds = daily.agg(
         F.min("day").alias("d0"),
         F.datediff(F.max("day"), F.min("day")).cast("long").alias("span"),
     )
-    grid = (
+    grid = memory.cut(
         bounds.select("d0", F.explode(F.sequence(F.lit(0).cast("long"), F.col("span"))).alias("t"))
         .join(
             daily.withColumnRenamed("day", "dday"),
             F.expr("dday = date_add(d0, CAST(t AS INT))"),
             "left",
         )
-        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")),
+        "persist",
     )
     tot = grid.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum("x").cast("decimal(38,0)").alias("s"),
     )
-    dev = grid.crossJoin(F.broadcast(tot)).select(
+    dev = memory.cut(grid.crossJoin(F.broadcast(tot)).select(
         "t", (F.col("n") * F.col("x") - F.col("s")).cast("decimal(38,0)").alias("d")
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     den_df = dev.agg(F.sum(F.col("d") * F.col("d")).cast("decimal(38,0)").alias("den"))
     lags = spark.range(1, _LB_LAGS + 1).select(F.col("id").alias("k"))
     b = dev.select(F.col("t").alias("bt"), F.col("d").alias("bd"))
@@ -216,7 +216,7 @@ def stats_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF); the pair self-join is grid×grid (~3,200 rows — calendar-bounded,
     NOT data-bounded), sorted in one bounded array."""
     orders = load(spark, sf_dir, "orders")
-    monthly = (
+    monthly = memory.cut(
         orders.select(
             (
                 (F.year("o_orderdate") - F.lit(1992)) * 12 + (F.month("o_orderdate") - 1)
@@ -226,8 +226,8 @@ def stats_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .groupBy("m")
-        .agg(F.sum("cents").cast("long").alias("r"))
-        .persist(CKPT_LEVEL)
+        .agg(F.sum("cents").cast("long").alias("r")),
+        "persist",
     )
     b = monthly.select(F.col("m").alias("bm"), F.col("r").alias("br"))
     pairs = monthly.join(F.broadcast(b), F.expr("bm > m")).selectExpr(
@@ -359,28 +359,28 @@ def stats_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition is at most 64 rows), and the 4-row pivot are all
     calendar-bounded."""
     orders = load(spark, sf_dir, "orders")
-    daily = (
+    daily = memory.cut(
         orders.select(
             F.col("o_orderdate").cast("date").alias("day"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .groupBy("day")
-        .agg(F.sum("cents").cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .agg(F.sum("cents").cast("long").alias("x")),
+        "persist",
     )
     bounds = daily.agg(
         F.min("day").alias("d0"),
         F.datediff(F.max("day"), F.min("day")).cast("long").alias("span"),
     )
-    grid = (
+    grid = memory.cut(
         bounds.select("d0", F.explode(F.sequence(F.lit(0).cast("long"), F.col("span"))).alias("t"))
         .join(
             daily.withColumnRenamed("day", "dday"),
             F.expr("dday = date_add(d0, CAST(t AS INT))"),
             "left",
         )
-        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")),
+        "persist",
     )
     ws = spark.createDataFrame([(w,) for w in _HURST_WS], "w long")
     tagged = grid.crossJoin(F.broadcast(ws)).select(
@@ -519,37 +519,37 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one data-scale groupBy(day); everything else is
     calendar-bounded."""
     orders = load(spark, sf_dir, "orders")
-    daily = (
+    daily = memory.cut(
         orders.select(
             F.col("o_orderdate").cast("date").alias("day"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .groupBy("day")
-        .agg(F.sum("cents").cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .agg(F.sum("cents").cast("long").alias("x")),
+        "persist",
     )
     bounds = daily.agg(
         F.min("day").alias("d0"),
         F.datediff(F.max("day"), F.min("day")).cast("long").alias("span"),
     )
-    grid = (
+    grid = memory.cut(
         bounds.select("d0", F.explode(F.sequence(F.lit(0).cast("long"), F.col("span"))).alias("t"))
         .join(
             daily.withColumnRenamed("day", "dday"),
             F.expr("dday = date_add(d0, CAST(t AS INT))"),
             "left",
         )
-        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")),
+        "persist",
     )
     med = grid.agg(
         F.count(F.lit(1)).cast("long").alias("ng"),
         F.sort_array(F.collect_list("x")).alias("ls"),
     ).selectExpr("element_at(ls, CAST((ng + 1) div 2 AS INT)) AS m")
-    signs = (
+    signs = memory.cut(
         grid.crossJoin(F.broadcast(med))
-        .select("t", F.when(F.col("x") > F.col("m"), 1).otherwise(0).alias("s"))
-        .persist(CKPT_LEVEL)
+        .select("t", F.when(F.col("x") > F.col("m"), 1).otherwise(0).alias("s")),
+        "persist",
     )
     b = signs.select(F.col("t").alias("bt"), F.col("s").alias("bs"))
     changes = signs.join(F.broadcast(b), F.expr("bt = t - 1")).agg(
@@ -640,14 +640,14 @@ def orders_seasonality_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one data-scale groupBy(day); the grid and the 17-number
     pivot are calendar-bounded."""
     orders = load(spark, sf_dir, "orders")
-    daily = (
+    daily = memory.cut(
         orders.select(
             F.col("o_orderdate").cast("date").alias("day"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .groupBy("day")
-        .agg(F.sum("cents").cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .agg(F.sum("cents").cast("long").alias("x")),
+        "persist",
     )
     bounds = daily.agg(
         F.min("day").alias("d0"),
@@ -757,7 +757,7 @@ def events_churn_risk_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         F.datediff(F.col("d"), F.col("last_day")).cast("long").alias("idle_days"),
     )
-    aged = aged.persist(CKPT_LEVEL)  # feeds the total AND the fold
+    aged = memory.cut(aged, "persist")  # feeds the total AND the fold
     tot = aged.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     return (
         aged.selectExpr(f"{_CHURN_BUCKET} AS bucket", "n_events", "idle_days")
@@ -825,7 +825,7 @@ def events_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = e.selectExpr(
         "CAST((epoch_us div 86400000000) % 7 AS BIGINT) AS dow_thu0", "hr"
     ).groupBy("dow_thu0", "hr").agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    g = g.persist(CKPT_LEVEL)  # feeds the total AND the share projection
+    g = memory.cut(g, "persist")  # feeds the total AND the share projection
     t = g.agg(F.sum("n_events").cast("long").alias("total"))
     return (
         g.crossJoin(F.broadcast(t))
@@ -916,28 +916,28 @@ def stats_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     7 rows. At 100 TB the day dictionary still fits in one partition —
     the scan dominates, as it should."""
     orders = load(spark, sf_dir, "orders")
-    daily = (
+    daily = memory.cut(
         orders.select(
             F.col("o_orderdate").cast("date").alias("day"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .groupBy("day")
-        .agg(F.sum("cents").cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .agg(F.sum("cents").cast("long").alias("x")),
+        "persist",
     )
     bounds = daily.agg(
         F.min("day").alias("d0"),
         F.datediff(F.max("day"), F.min("day")).cast("long").alias("span"),
     )
-    grid = (
+    grid = memory.cut(
         bounds.select("d0", F.explode(F.sequence(F.lit(0).cast("long"), F.col("span"))).alias("t"))
         .join(
             daily.withColumnRenamed("day", "dday"),
             F.expr("dday = date_add(d0, CAST(t AS INT))"),
             "left",
         )
-        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"))
-        .persist(CKPT_LEVEL)  # feeds totals AND both join sides
+        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")),
+        "persist",  # feeds totals AND both join sides
     )
     tot = grid.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1046,21 +1046,21 @@ def orders_interpurchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gaps = (
+    gaps = memory.cut(
         orders.select(
             F.col("o_custkey").alias("c"),
             F.col("o_orderdate").alias("d"),
             F.lag("o_orderdate").over(w).alias("prev_d"),
         )
         .filter(F.col("prev_d").isNotNull())
-        .select("c", F.datediff("d", "prev_d").cast("long").alias("gap"))
-        .persist(CKPT_LEVEL)  # feeds the dictionary AND n_repeat
+        .select("c", F.datediff("d", "prev_d").cast("long").alias("gap")),
+        "persist",  # feeds the dictionary AND n_repeat
     )
-    dict_df = (
+    dict_df = memory.cut(
         gaps.groupBy("gap")
         .agg(F.count(F.lit(1)).cast("long").alias("ng"))
-        .withColumn("_g", F.lit(1))
-        .persist(CKPT_LEVEL)
+        .withColumn("_g", F.lit(1)),
+        "persist",
     )
     r = grouped_running_sum(dict_df, ["_g"], ["gap"], "ng", "cum").select("gap", "ng", "cum")
     tot = (
@@ -1166,39 +1166,39 @@ def stats_grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one data-scale groupBy(day); everything else is
     calendar-bounded arithmetic on the grid."""
     orders = load(spark, sf_dir, "orders")
-    daily = (
+    daily = memory.cut(
         orders.select(
             F.col("o_orderdate").cast("date").alias("day"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
         .groupBy("day")
-        .agg(F.sum("cents").cast("long").alias("x"))
-        .persist(CKPT_LEVEL)
+        .agg(F.sum("cents").cast("long").alias("x")),
+        "persist",
     )
     bounds = daily.agg(
         F.min("day").alias("d0"),
         F.datediff(F.max("day"), F.min("day")).cast("long").alias("span"),
     )
-    grid = (
+    grid = memory.cut(
         bounds.select("d0", F.explode(F.sequence(F.lit(0).cast("long"), F.col("span"))).alias("t"))
         .join(
             daily.withColumnRenamed("day", "dday"),
             F.expr("dday = date_add(d0, CAST(t AS INT))"),
             "left",
         )
-        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x"))
-        .persist(CKPT_LEVEL)  # feeds totals, deviations, and the pick
+        .select("t", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")),
+        "persist",  # feeds totals, deviations, and the pick
     )
     tot = grid.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
         F.sum(F.col("x").cast("decimal(38,0)") * F.col("x")).alias("q"),
     )
-    dev = grid.crossJoin(F.broadcast(tot)).select(
+    dev = memory.cut(grid.crossJoin(F.broadcast(tot)).select(
         "t",
         "x",
         F.abs(F.col("n").cast("decimal(38,0)") * F.col("x") - F.col("s")).alias("d"),
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     dmax = dev.agg(F.max("d").alias("dm"))
     pick = (
         dev.crossJoin(F.broadcast(dmax))

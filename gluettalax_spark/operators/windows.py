@@ -11,7 +11,7 @@ oracle compare.
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -835,9 +835,9 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(0),
     )
     sessions = marked.withColumn("session_no", F.sum("new_session").over(w))
-    spans = sessions.groupBy("user_id", "session_no").agg(
+    spans = memory.cut(sessions.groupBy("user_id", "session_no").agg(
         F.unix_micros(F.min("ts")).alias("t0"), F.unix_micros(F.max("ts")).alias("t1")
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     deltas = spans.select(
         F.col("t0").alias("t"), F.lit(1).alias("delta"), F.lit(-1).alias("neg")
     ).unionAll(
@@ -845,9 +845,9 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gluettalax_spark.operators.rank import grouped_running_sum
 
-    running = grouped_running_sum(
+    running = memory.cut(grouped_running_sum(
         deltas.withColumn("_g", F.lit(1)), ["_g"], ["t", "neg"], "delta", "cur"
-    ).persist(CKPT_LEVEL)  # feeds the peak aggregate AND the peak-at lookup
+    ), "persist")  # feeds the peak aggregate AND the peak-at lookup
     peak = running.agg(F.max("cur").cast("long").alias("peak"))
     peak_at = (
         running.crossJoin(F.broadcast(peak))
@@ -948,9 +948,9 @@ def events_session_type_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(0),
     )
     sessions = marked.withColumn("session_no", F.sum("new_session").over(w))
-    per_session = sessions.groupBy("user_id", "session_no").agg(
+    per_session = memory.cut(sessions.groupBy("user_id", "session_no").agg(
         F.sort_array(F.collect_set("event_type")).alias("types")
-    ).persist(CKPT_LEVEL)
+    ), "persist")
     nn = per_session.agg(F.count(F.lit(1)).cast("long").alias("n_sessions"))
     singles = (
         per_session.select(F.explode("types").alias("a"))

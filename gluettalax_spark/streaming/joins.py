@@ -18,7 +18,7 @@ completion on the finite fixture and compare against the batch truth
 
 from __future__ import annotations
 
-from gluettalax_spark.memory import CKPT_LEVEL
+from gluettalax_spark import memory
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -415,7 +415,7 @@ def _register_funnel_latency():
             .agg(F.count(F.lit(1)).cast("long").alias("n_views"))
             .withColumn("_g", F.lit(1))
         )
-        hist = hist.persist(CKPT_LEVEL)  # feeds total AND running sum (lazy cut, r12)
+        hist = memory.cut(hist, "persist")  # feeds total AND running sum (lazy cut, r12)
         tot = hist.agg(F.sum("n_views").cast("long").alias("total"))
         cum = grouped_running_sum(hist, ["_g"], ["bucket"], "n_views", "cum_views")
         return (

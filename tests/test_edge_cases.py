@@ -400,3 +400,67 @@ def test_covariance_and_pca_tiny_corpus(spark, tmp_path):
     rows = queries()["embedding_pca_project"](spark, out).collect()
     assert len(rows) == 5
     assert abs(rows[0]["var_pc1"] / rows[0]["eig1"] - 1.0) < 0.05
+
+
+def test_cc_fractional_decimal_labels_use_the_join_probe(spark):
+    """Decimal labels with a fractional scale round under the label-sum
+    probe's decimal(38,0) cast: on the chain 1.1-1.2-1.3-1.4 the second
+    round moves 1.4's label from 1.3 to 1.2 while the rounded sum stays
+    4, which would read as converged. Such labels take the join probe."""
+    from gluettalax_spark.operators.graph import connected_components
+
+    edges = spark.sql(
+        "SELECT CAST(u AS DECIMAL(3,1)) AS u, CAST(v AS DECIMAL(3,1)) AS v"
+        " FROM VALUES (1.1, 1.2), (1.2, 1.3), (1.3, 1.4) AS t(u, v)"
+    )
+    got = {(str(r.node), str(r.component)) for r in connected_components(edges).collect()}
+    assert got == {(n, "1.1") for n in ("1.1", "1.2", "1.3", "1.4")}
+
+
+def test_cc_null_label_sum_is_not_convergence(spark):
+    """Legacy (non-ANSI) mode returns NULL for an overflowing decimal
+    sum; two NULL sums in a row must not read as converged. Labels near
+    4e37 overflow decimal(38,0) once four of them are summed."""
+    from gluettalax_spark.operators.graph import connected_components
+
+    base = 4 * 10**37
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        edges = spark.sql(
+            "SELECT CAST(u AS DECIMAL(38,0)) AS u, CAST(v AS DECIMAL(38,0)) AS v FROM VALUES "
+            + ", ".join(f"('{base + i}', '{base + i + 1}')" for i in range(1, 4))
+            + " AS t(u, v)"
+        )
+        got = {(int(r.node), int(r.component)) for r in connected_components(edges).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == {(base + i, base + 1) for i in range(1, 5)}
+
+
+def test_rfm_monetary_cents_keep_adjacent_values_apart(spark, tmp_path):
+    """0.29 * 100 is 28.999999999999996 in a double: truncating it to a
+    long collided with 0.28's 28, so the custkey tie-break put customer
+    1 (0.28) ahead of customer 2 (0.29). The m_quartile order must be
+    monetary DESC, as in the oracle."""
+    import duckdb
+
+    from gluettalax_spark.operators.pipeline import _RFM_ORACLE
+    from gluettalax_spark.registry import queries
+
+    orders = spark.sql(
+        "SELECT CAST(k AS BIGINT) AS o_orderkey, CAST(c AS BIGINT) AS o_custkey,"
+        " 'O' AS o_orderstatus, CAST(p AS DOUBLE) AS o_totalprice,"
+        " TIMESTAMP '1998-01-01 00:00:00' AS o_orderdate, '1-URGENT' AS o_orderpriority"
+        " FROM VALUES (1, 1, 0.28), (2, 2, 0.29), (3, 3, 5.0), (4, 4, 0.10) AS t(k, c, p)"
+    )
+    out = str(tmp_path / "rfm")
+    orders.write.parquet(f"{out}/orders.parquet")
+    rows = queries()["customer_rfm_segments"](spark, out).collect()
+    got = {r.o_custkey: r.m_quartile for r in rows}
+    assert got == {3: 1, 2: 2, 1: 3, 4: 4}
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{out}/orders.parquet/*.parquet'")
+    assert got == {k: q for k, q in con.execute(
+        f"SELECT o_custkey, m_quartile FROM ({_RFM_ORACLE})"
+    ).fetchall()}

@@ -89,3 +89,52 @@ def test_full_etl_roundtrip(spark, sf_dir, db, tmp_path):
     # 4. History: the run is visible through the runs DataFrame (A3/C5).
     hist = registry.runs_df(spark).filter(F.col("job_name") == "daily_revenue_etl").collect()
     assert len(hist) == 1 and hist[0].state == "SUCCEEDED"
+
+
+# Twenty keys that cut lineage (persist, lazy and eager checkpoints, the
+# CC generation rotator and both DataFrame memos), from the graph,
+# tseries, text, curation and dedup modules.
+RELEASE_KEYS = (
+    "graph_kcore",
+    "graph_degree_distribution",
+    "graph_communities_lpa",
+    "graph_pagerank",
+    "dedup_clusters",
+    "events_dow_hour_profile",
+    "stats_ljung_box",
+    "stats_runs_test",
+    "orders_interpurchase_gaps",
+    "text_mattr_diversity",
+    "text_char_entropy",
+    "text_bpe_train",
+    "text_bpe_apply",
+    "stats_cohens_kappa",
+    "stats_grubbs_daily",
+    "quality_brier_score",
+    "quality_drift_psi",
+    "dedup_fuzzy_clusters",
+    "dedup_storage_savings",
+    "dedup_minhash_lsh",
+)
+
+
+def test_registry_keys_release_their_cuts(spark, sf_dir):
+    """Run the keys one after another in one session, each in a scope:
+    after each, the only persisted RDDs the run added are those held by
+    live memo entries (the logits and BPE-dictionary memos)."""
+    from gluettalax_spark import memory
+    from gluettalax_spark.registry import all_queries
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    specs = all_queries()
+    for name in RELEASE_KEYS:
+        with memory.scope():
+            assert specs[name].builder(spark, sf_dir).count() >= 0
+        memo_frames = [f for _, _, frames in memory._MEMOS.values() for f in frames]
+        memo_ckpts = {
+            f._jdf.queryExecution().analyzed().rdd().id() for f in memo_frames if not f.is_cached
+        }
+        n_memo_cached = sum(1 for f in memo_frames if f.is_cached)
+        left = set(jsc.getPersistentRDDs().keySet()) - before - memo_ckpts
+        assert len(left) <= n_memo_cached, (name, sorted(left))

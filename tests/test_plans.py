@@ -883,25 +883,22 @@ def test_lorenz_has_no_data_scale_window(spark, sf_dir):
 
 
 def test_no_deserialized_lineage_cuts():
-    """Repo-wide source audit: every localCheckpoint must pass
-    storageLevel=CKPT_LEVEL (serialized, evictable to disk). PySpark's
-    default level stores deserialized row OBJECTS — at the 100x
+    """Repo-wide source audit: no module but gluettalax_spark/memory.py
+    calls ``.persist(`` or ``.localCheckpoint(``. Every lineage cut goes
+    through ``memory.cut``, which stores serialized blocks (CKPT_LEVEL)
+    and registers them with the query's scope. PySpark's default
+    checkpoint level stores deserialized row OBJECTS — at the 100x
     rehearsal scale that is what OOM'd the 8 GiB heap twice (HITS edge
-    cache in r11, the 27M-pair CC sym table in r12; see
-    gluettalax_spark/memory.py). New call sites must opt in to the
-    policy explicitly so the footprint stays row-object-free."""
+    cache in r11, the 27M-pair CC sym table in r12), and a cut made
+    outside ``memory.cut`` is never released."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent / "gluettalax_spark"
-    offenders = []
-    for f in root.rglob("*.py"):
-        src = f.read_text()
-        for i, line in enumerate(src.splitlines(), 1):
-            if ".localCheckpoint(" in line and "CKPT_LEVEL" not in line:
-                # multi-line call: the level must appear between the
-                # call's open paren and the next closing paren
-                tail = "\n".join(src.splitlines()[i - 1 : i + 3])
-                args = tail.split(".localCheckpoint(", 1)[1]
-                if "CKPT_LEVEL" not in args.split(")")[0]:
-                    offenders.append(f"{f.name}:{i}")
+    offenders = [
+        f"{f.relative_to(root)}:{i}"
+        for f in sorted(root.rglob("*.py"))
+        if f.name != "memory.py" or f.parent != root
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if ".persist(" in line or ".localCheckpoint(" in line
+    ]
     assert offenders == [], offenders

@@ -1,5 +1,5 @@
 """Round 12, wave 5: scheduler-floor tuner (`tune_for_fixture`) and the
-100× sweep's memory hygiene (VERDICT r11 tasks #4/#6)."""
+100× sweep's key list (VERDICT r11 tasks #5/#6)."""
 
 from __future__ import annotations
 
@@ -48,40 +48,6 @@ class TestTuneForFixture:
 
 
 class TestSweepMemoryRelease:
-    def test_releases_checkpoint_blocks_and_model_cache(self, spark, sf_dir):
-        import bench
-        from gluettalax_spark.operators import ann
-
-        # Create both kinds of retained state the sweep accumulates.
-        df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").localCheckpoint(eager=True)
-        assert df.count() > 0
-        ann._MODEL_CACHE[("ivf-assign", ("fake",), "app")] = ("df", "centers")
-        assert spark.sparkContext._jsc.getPersistentRDDs().size() > 0
-
-        bench._release_sweep_memory(spark)
-
-        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-        assert not any(
-            isinstance(k, tuple) and k and k[0] == "ivf-assign" for k in ann._MODEL_CACHE
-        )
-
-    def test_numpy_model_caches_survive(self, spark, sf_dir):
-        """Only the session-bound DataFrame memo is dropped — the numpy
-        codebook/centroid models are plain arrays and must stay cached."""
-        import bench
-        from gluettalax_spark.operators import ann
-
-        ann._ivf_centers_np(sf_dir)
-        n_numpy_keys = sum(
-            1 for k in ann._MODEL_CACHE if isinstance(k, tuple) and k[0] == "ivf-centers"
-        )
-        assert n_numpy_keys >= 1
-        bench._release_sweep_memory(spark)
-        assert (
-            sum(1 for k in ann._MODEL_CACHE if isinstance(k, tuple) and k[0] == "ivf-centers")
-            == n_numpy_keys
-        )
-
     def test_broadened_sweep_covers_r4_subset(self):
         """scaling_100x must enumerate >= 39 batch keys (task #5)."""
         import bench

@@ -145,45 +145,12 @@ class TestNdcgEval:
 
 
 class TestMemoryPolicy:
-    def test_session_df_cache_registry_clears_registered_dicts(self):
-        from gluettalax_spark import memory
-
-        d = memory.register_session_df_cache({})
-        try:
-            d["k"] = "v"
-            memory.clear_session_df_caches()
-            assert d == {}
-            # the known module memos are registered (the r12 sweep bug:
-            # unpersist-all left them pointing at dead checkpoint blocks)
-            from gluettalax_spark.operators.pipeline import _LOGITS_CACHE
-            from gluettalax_spark.operators.text import _BPE_DICT_CACHE
-
-            assert any(c is _LOGITS_CACHE for c in memory.SESSION_DF_CACHES)
-            assert any(c is _BPE_DICT_CACHE for c in memory.SESSION_DF_CACHES)
-        finally:
-            memory.SESSION_DF_CACHES[:] = [
-                c for c in memory.SESSION_DF_CACHES if c is not d
-            ]
-
-    def test_sweep_release_survives_logits_memo_reuse(self, spark, sf_dir):
-        """The r12 sweep crash, as a regression test: build the memoized
-        logits frame, release all blocks the way the sweep does, then
-        call the memoized path again — it must rebuild, not die on
-        CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
-        import bench
-        from gluettalax_spark.operators.pipeline import classifier_doc_logits
-
-        n1 = classifier_doc_logits(spark, sf_dir).count()
-        bench._release_sweep_memory(spark)
-        n2 = classifier_doc_logits(spark, sf_dir).count()
-        assert n1 == n2 > 0
-
     def test_generation_rotator_releases_superseded_blocks(self, spark):
         from gluettalax_spark.operators.graph import _GenerationRotator
 
         jsc = spark.sparkContext._jsc
         base = set(jsc.getPersistentRDDs().keys())
-        rot = _GenerationRotator(spark)
+        rot = _GenerationRotator()
         g1 = rot.checkpoint(spark.range(100).toDF("x"))
         rot.retire()  # promotes g1, nothing released yet
         g1_ids = set(jsc.getPersistentRDDs().keys()) - base

@@ -49,7 +49,7 @@ def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_PROFILE_RUNS", "3"))
     plans_only = os.environ.get("SPARK_GRAFT_PLANS_ONLY", "").lower() == "true"
 
-    from gluettalax_spark import registry
+    from gluettalax_spark import memory, registry
     from gluettalax_spark.session import get_spark, tune_for_fixture
 
     import bench
@@ -65,33 +65,35 @@ def main() -> None:
 
     # Warm-up (bench methodology)
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
-    specs[names[0]].builder(spark, SF_DIR).count()
+    with memory.scope():
+        specs[names[0]].builder(spark, SF_DIR).count()
 
     out: dict[str, dict] = {}
     for name in names:
         builder = specs[name].builder
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        try:
-            build_s, noop_s, count_s = ([0.0], [0.0], [0.0]) if plans_only else ([], [], [])
-            for i in range(0 if plans_only else runs):
-                t0 = time.perf_counter()
-                df = builder(spark, SF_DIR)
-                build_s.append(time.perf_counter() - t0)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                noop_s.append(time.perf_counter() - t0)
-                t0 = time.perf_counter()
-                df2 = builder(spark, SF_DIR)
-                df2.count()
-                count_s.append(time.perf_counter() - t0)
-            df3 = builder(spark, SF_DIR)
-            jqe = df3._jdf.queryExecution()
-            mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            plan = jqe.explainString(mode)
-        except Exception as ex:  # keep sweeping; report the failure
-            out[name] = {"error": f"{type(ex).__name__}: {ex}"[:300]}
-            print(f"  {name}: ERROR {out[name]['error']}", file=sys.stderr, flush=True)
-            continue
+        with memory.scope():
+            try:
+                build_s, noop_s, count_s = ([0.0], [0.0], [0.0]) if plans_only else ([], [], [])
+                for i in range(0 if plans_only else runs):
+                    t0 = time.perf_counter()
+                    df = builder(spark, SF_DIR)
+                    build_s.append(time.perf_counter() - t0)
+                    t0 = time.perf_counter()
+                    df.write.format("noop").mode("overwrite").save()
+                    noop_s.append(time.perf_counter() - t0)
+                    t0 = time.perf_counter()
+                    df2 = builder(spark, SF_DIR)
+                    df2.count()
+                    count_s.append(time.perf_counter() - t0)
+                df3 = builder(spark, SF_DIR)
+                jqe = df3._jdf.queryExecution()
+                mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+                plan = jqe.explainString(mode)
+            except Exception as ex:  # keep sweeping; report the failure
+                out[name] = {"error": f"{type(ex).__name__}: {ex}"[:300]}
+                print(f"  {name}: ERROR {out[name]['error']}", file=sys.stderr, flush=True)
+                continue
         with open(os.path.join(plans_dir, f"{name}_{phase}.txt"), "w") as fh:
             fh.write(plan)
         summ = plan_summary(plan)
@@ -108,10 +110,6 @@ def main() -> None:
             file=sys.stderr,
             flush=True,
         )
-        # Same between-query hygiene as bench.main — without it, keys
-        # profiled late in the session read up to 2× slow (accumulated
-        # checkpoint blocks starving the heap).
-        bench._release_sweep_memory(spark)
     spark.sparkContext.setJobDescription(None)
 
     with open(f"/tmp/profile_{phase}.json", "w") as fh:

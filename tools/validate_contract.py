@@ -52,7 +52,7 @@ def main() -> int:
     print(f"entry rows: {entry_rows}")
     assert entry_rows > 0
 
-    from gluettalax_spark import registry
+    from gluettalax_spark import memory, registry
 
     specs = registry.all_queries()
     skip_fixture_only = os.environ.get("SPARK_GRAFT_SKIP_FIXTURE_ONLY", "").lower() == "true"
@@ -67,17 +67,18 @@ def main() -> int:
             print(f"  {name}: skipped (fixture-scale-only)")
             continue
         try:
-            if name in osql:
-                sp = qs[name](spark, sf_dir).toPandas()
-                od = con.execute(osql[name]).df()
-                cols = sorted(sp.columns)
-                a = sorted(map(repr, sp[cols].values.tolist()))
-                b = sorted(map(repr, od[cols].values.tolist()))
-                ok = a == b
-                status = "match" if ok else "MISMATCH"
-            else:
-                qs[name](spark, sf_dir).count()
-                ok, status = True, "rows-only"
+            with memory.scope():
+                if name in osql:
+                    sp = qs[name](spark, sf_dir).toPandas()
+                    od = con.execute(osql[name]).df()
+                    cols = sorted(sp.columns)
+                    a = sorted(map(repr, sp[cols].values.tolist()))
+                    b = sorted(map(repr, od[cols].values.tolist()))
+                    ok = a == b
+                    status = "match" if ok else "MISMATCH"
+                else:
+                    qs[name](spark, sf_dir).count()
+                    ok, status = True, "rows-only"
         except Exception as ex:  # noqa: BLE001 - report, don't abort the sweep
             ok, status = False, f"ERROR {type(ex).__name__}: {str(ex)[:120]}"
         if not ok:
