@@ -15,6 +15,8 @@ test-full:
 bench:
 	python bench.py
 
+# Rewrite plans/budget.json, the per-key plan node budgets that
+# tests/test_plans.py checks.
 plans:
 	python tools/dump_plans.py
 

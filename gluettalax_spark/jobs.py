@@ -148,10 +148,6 @@ class JobRegistry:
         def work() -> None:
             t0 = time.monotonic()
             spark.sparkContext.setJobGroup(run.run_id, f"job {name}", interruptOnCancel=True)
-            # Each job runs in its own fair-scheduler pool so one heavy job
-            # can't starve concurrent ones (the in-process analog of Glue
-            # jobs getting separate capacity). Thread-local, like JobGroup.
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"job_{name}")
             try:
                 # The run owns every lineage cut its function makes; they
                 # are released when the run ends, as a Glue run's resources.
@@ -169,7 +165,6 @@ class JobRegistry:
                         run.error = f"{type(exc).__name__}: {exc}"
             finally:
                 spark.sparkContext.setJobGroup("", "")
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
                 with self._lock:
                     run.execution_time = time.monotonic() - t0
                 sem.release()

@@ -579,8 +579,8 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one data-scale groupBy (user) then a dictionary groupBy
     (distinct |d| magnitudes); the running rank uses
-    `grouped_running_sum`, never an unpartitioned window over rows."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    `grouped_running_sums`, never an unpartitioned window over rows."""
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     events = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("long")
@@ -604,7 +604,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("_g", F.lit(1))
     )
-    ranked = grouped_running_sum(dict_df, ["_g"], ["a"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, ["_g"], ["a"], [("nv", "cum")])
     m = ranked.agg(
         F.sum("nv").cast("long").alias("n"),
         F.sum(
@@ -788,10 +788,10 @@ def agg_trimmed_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression each).
 
     Scale: one data-scale groupBy to the value dictionary (cents
-    cardinality ≪ rows); the running count is `grouped_running_sum`
+    cardinality ≪ rows); the running count is `grouped_running_sums`
     (range-partitioned, never a single-task window); the 1-row (n, k)
     frame broadcasts into the fold."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     vals = load(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("v")
@@ -799,7 +799,7 @@ def agg_trimmed_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     dict_df = (
         vals.groupBy("v").agg(F.count("*").cast("long").alias("nv")).withColumn("_g", F.lit(1))
     )
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, ["_g"], ["v"], [("nv", "cum")])
     m = dict_df.agg(
         F.sum("nv").cast("long").alias("n"),
         F.expr("CAST(sum(nv) DIV 10 AS BIGINT)").alias("k"),
@@ -916,8 +916,8 @@ def events_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two scans (calibration residuals, test coverage), each
     joining a broadcast types-sized frame; the residual dictionary is
     per-type cents cardinality; the running count is
-    `grouped_running_sum` grouped by type."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    `grouped_running_sums` grouped by type."""
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     events = load(spark, sf_dir, "events")
     cal = events.filter("event_id % 2 = 0")
@@ -936,7 +936,7 @@ def events_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dict_df = resid.groupBy("event_type", "r").agg(F.count("*").cast("long").alias("nv"))
-    ranked = grouped_running_sum(dict_df, ["event_type"], ["r"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, ["event_type"], ["r"], [("nv", "cum")])
     k_expr = "least((9 * (n_cal + 1) + 9) DIV 10, n_cal)"
     qs = (
         ranked.join(F.broadcast(pred), "event_type")
@@ -1038,9 +1038,9 @@ def orders_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one data-scale groupBy to calendar days, a second to the
     demand-value dictionary (≤ days); the running count uses
-    `grouped_running_sum`; 1-row (n, k) and q* frames broadcast into
+    `grouped_running_sums`; 1-row (n, k) and q* frames broadcast into
     the final fold."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     daily = (
         load(spark, sf_dir, "orders")
@@ -1051,7 +1051,7 @@ def orders_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily.groupBy("d").agg(F.count("*").cast("long").alias("nv")).withColumn("_g", F.lit(1))
     )
     dict_df = memory.cut(dict_df, "persist")  # feeds rank, m, and the fold
-    ranked = grouped_running_sum(dict_df, ["_g"], ["d"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, ["_g"], ["d"], [("nv", "cum")])
     m = dict_df.agg(
         F.sum("nv").cast("long").alias("n"),
         F.expr("CAST((9 * sum(nv) + 9) DIV 10 AS BIGINT)").alias("k"),
@@ -2146,10 +2146,10 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie run = nv·(2·cum−nv)); each value's term quantizes to integer
     micro-units before the order-independent sum.
 
-    Scale: the dictionary + running-count machinery (`grouped_running_sum`)
+    Scale: the dictionary + running-count machinery (`grouped_running_sums`)
     over calendar days — metadata scale at any SF; the moment fold
     broadcasts into the term table."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     daily = (
         load(spark, sf_dir, "orders")
@@ -2164,7 +2164,7 @@ def stats_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily.groupBy("v").agg(F.count("*").cast("long").alias("nv")).withColumn("_g", F.lit(1))
     )
     dict_df = memory.cut(dict_df, "persist")
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, ["_g"], ["v"], [("nv", "cum")])
     m = dict_df.agg(
         F.sum("nv").cast("long").alias("n"),
         F.sum(F.col("v").cast("decimal(38,0)") * F.col("nv")).cast("long").alias("s1"),
@@ -2923,7 +2923,7 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partitioned running rank), one broadcast join of the
     dictionary-sized decile map back onto the scan, and the PSI fold
     lands on the 10-row grid."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
     from gluettalax_spark.operators.stats import PSI_Q
     from gluettalax_spark.operators.text import _quality_parts
 
@@ -2940,7 +2940,7 @@ def quality_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_g", F.lit(1))
     )
     d = memory.cut(d, "persist")  # value dictionary; feeds the running rank AND nn
-    r = grouped_running_sum(d, ["_g"], ["v"], "nv", "cum").select("v", "nv", "cum")
+    r = grouped_running_sums(d, ["_g"], ["v"], [("nv", "cum")]).select("v", "nv", "cum")
     nn = d.agg(F.sum("nv").cast("long").alias("n"))
     dec = r.crossJoin(F.broadcast(nn)).selectExpr(
         "v", "CAST((cum - nv) * 10 DIV n AS BIGINT) AS decile"

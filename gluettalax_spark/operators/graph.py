@@ -1875,7 +1875,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune); degrees are one node-keyed aggregate; the histogram and its
     running sum live on the degree-value dictionary (bounded by the max
     degree), using the range-partitioned running-sum machinery."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     edges = cooccurrence_edges(spark, sf_dir)
     # Both endpoints explode from each edge row IN-ROW (optimization r12,
@@ -1893,7 +1893,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hist = memory.cut(hist, "persist")  # feeds the total AND the running sum
     tot = hist.agg(F.sum("n_nodes").cast("long").alias("total"))
-    cum = grouped_running_sum(hist, ["_g"], ["degree"], "n_nodes", "cum_nodes")
+    cum = grouped_running_sums(hist, ["_g"], ["degree"], [("n_nodes", "cum_nodes")])
     return (
         cum.crossJoin(F.broadcast(tot))
         .selectExpr(

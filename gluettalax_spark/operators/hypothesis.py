@@ -29,7 +29,7 @@ from gluettalax_spark import memory
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gluettalax_spark.operators.rank import grouped_running_sum
+from gluettalax_spark.operators.rank import grouped_running_sums
 from gluettalax_spark.registry import register
 from gluettalax_spark.tables import load
 
@@ -87,7 +87,7 @@ FROM m
 def stats_mannwhitney_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U via the value-dictionary construction: group the
     cents-quantized values (exact), take a scale-safe running count over
-    the dictionary (``grouped_running_sum``, never an unpartitioned
+    the dictionary (``grouped_running_sums``, never an unpartitioned
     window over data rows), and fold the 2×-average-rank identity
     ``R2(v) = 2·cum_before + n_v + 1`` into integer moments. ``u1_x2``
     and the tie term are exact; ``z`` (normal approximation with tie
@@ -105,7 +105,7 @@ def stats_mannwhitney_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(1 - F.col("in_a")).cast("long").alias("n2v"),
         F.count(F.lit(1)).cast("long").alias("nv"),
     ).withColumn("_g", F.lit(1))
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, ["_g"], ["v"], [("nv", "cum")])
     m = ranked.agg(
         F.sum("n1v").cast("long").alias("n1"),
         F.sum("n2v").cast("long").alias("n2"),
@@ -198,7 +198,7 @@ ORDER BY source
 def stats_spearman_quality_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman ρ per source with exact average-rank ties: marginal value
     dictionaries get scale-safe per-source running counts
-    (``grouped_running_sum``), the (x, y) pair dictionary joins its two
+    (``grouped_running_sums``), the (x, y) pair dictionary joins its two
     marginal 2×ranks back dictionary-keyed, and Pearson-on-ranks moments
     accumulate in DECIMAL(38,0). The 2× scale cancels in ρ, so the only
     float math is the single final expression (the two variance factors
@@ -220,7 +220,7 @@ def stats_spearman_quality_length(spark: SparkSession, sf_dir: str) -> DataFrame
 
     def marginal(col: str, cnt: str, cum: str) -> DataFrame:
         d = base.groupBy("source", col).agg(F.count(F.lit(1)).cast("long").alias(cnt))
-        return grouped_running_sum(d, ["source"], [col], cnt, cum)
+        return grouped_running_sums(d, ["source"], [col], [(cnt, cum)])
 
     dx = marginal("x", "cx", "cumx").select(
         "source", "x", (2 * (F.col("cumx") - F.col("cx")) + F.col("cx") + 1).alias("rx2")
@@ -520,7 +520,9 @@ def _kw_rank_frames(spark: SparkSession, sf_dir: str):
     dict_df = (
         cells.groupBy("v").agg(F.sum("n_gv").cast("long").alias("n_v")).withColumn("_g", F.lit(1))
     )
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "n_v", "cum").select("v", "n_v", "cum")
+    ranked = grouped_running_sums(dict_df, ["_g"], ["v"], [("n_v", "cum")]).select(
+        "v", "n_v", "cum"
+    )
     per_g = (
         cells.join(ranked, "v")
         .groupBy("g")
@@ -832,7 +834,7 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 A/B: lazy 0.96 ≈ persist 0.98 < eager 1.19 (count, best-of-3)
     # — persist kept (tied with lazy, no build-time stage execution).
     cells = memory.cut(cells, "persist")
-    ranked = grouped_running_sum(cells, ["g"], ["v"], "n_gv", "cum")
+    ranked = grouped_running_sums(cells, ["g"], ["v"], [("n_gv", "cum")])
     n_g_df = cells.groupBy("g").agg(F.sum("n_gv").cast("long").alias("n_g"))
     med = (
         ranked.join(F.broadcast(n_g_df), "g")
@@ -2156,7 +2158,7 @@ def stats_median_ci_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 A/B: lazy ckpt 0.71 < persist 0.80 < eager 0.92 (count,
     # best-of-3) — the r12 persist regression reverted to the r11 form.
     d = memory.cut(d, "lazy_ckpt")  # feeds the total AND the running rank
-    r = grouped_running_sum(d, ["_g"], ["v"], "nv", "cum").select("v", "nv", "cum")
+    r = grouped_running_sums(d, ["_g"], ["v"], [("nv", "cum")]).select("v", "nv", "cum")
     ranks = d.agg(F.sum("nv").cast("long").alias("n")).selectExpr(
         "n",
         f"greatest(1, CAST(floor((n - {_MCI_Z} * sqrt(CAST(n AS DOUBLE))) / 2)"
@@ -2259,7 +2261,7 @@ def stats_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_gv")),
         "persist",  # feeds cum, gn, and the z fold
     )
-    cum = grouped_running_sum(cells, ["g"], ["v"], "n_gv", "cum").select("g", "v", "cum")
+    cum = grouped_running_sums(cells, ["g"], ["v"], [("n_gv", "cum")]).select("g", "v", "cum")
     gn = cells.groupBy("g").agg(F.sum("n_gv").cast("long").alias("n_g"))
     med = (
         cum.join(F.broadcast(gn), "g")

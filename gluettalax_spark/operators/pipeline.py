@@ -947,10 +947,10 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The naive plan — ``sum() OVER (PARTITION BY source ORDER BY h)`` —
     funnels every source through ONE task; a source is a crawl at 100 TB.
-    This uses :func:`gluettalax_spark.operators.rank.grouped_running_sum`:
+    This uses :func:`gluettalax_spark.operators.rank.grouped_running_sums`:
     range-partition on (source, h), per-(pid, source) partial sums, and a
     metadata-scale prefix join — every stage parallel."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     docs = load(spark, sf_dir, "documents")
     t = docs.select(
@@ -959,8 +959,8 @@ def token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).cast("long").alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
-    run = grouped_running_sum(
-        t, ["source"], ["h", "doc_id"], "n_tokens", "cum_tokens"
+    run = grouped_running_sums(
+        t, ["source"], ["h", "doc_id"], [("n_tokens", "cum_tokens")]
     )
     return (
         run.filter(F.col("cum_tokens") <= TOKEN_BUDGET)
@@ -1806,7 +1806,7 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory-management classic, and the shape that needs a GLOBAL
     running sum over a data-scale table.
 
-    Scale shape: the running sum is `grouped_running_sum` with a
+    Scale shape: the running sum is `grouped_running_sums` with a
     constant group — range-repartition on the sort key, per-partition
     sums to a metadata-scale offsets table, local window + broadcast
     offset — never `Window.orderBy` without a partition (the single-task
@@ -1814,7 +1814,7 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer cents (no float shares), and the per-class summary is
     a 3-row aggregate. The revenue quantization (round(price*(1-disc)
     *100)) is the shared cents convention, deterministic cross-engine."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     li = load(spark, sf_dir, "lineitem")
     rev = (
@@ -1829,8 +1829,8 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("_g", F.lit(1))
     )
-    run = grouped_running_sum(
-        rev, ["_g"], [F.col("cents").desc(), F.col("pk")], "cents", "r"
+    run = grouped_running_sums(
+        rev, ["_g"], [F.col("cents").desc(), F.col("pk")], [("cents", "r")]
     )
     tot = rev.agg(F.sum("cents").cast("long").alias("t"))
     classed = run.crossJoin(F.broadcast(tot)).select(
@@ -2770,7 +2770,7 @@ def quality_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode (data-scale, one shuffle to doc grain); the AUC itself runs
     on the logit dictionary. The deterministic-surrogate weights make
     the whole readout oracle-checkable end to end."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
     from gluettalax_spark.operators.text import _quality_parts
 
     docs = load(spark, sf_dir, "documents")
@@ -2810,7 +2810,7 @@ def quality_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("_g", F.lit(1))
     )
-    ranked = grouped_running_sum(dict_df, ["_g"], ["v"], "nv", "cum")
+    ranked = grouped_running_sums(dict_df, ["_g"], ["v"], [("nv", "cum")])
     m = ranked.agg(
         F.sum("n1v").cast("long").alias("n_pos"),
         F.sum(F.col("nv") - F.col("n1v")).cast("long").alias("n_neg"),
@@ -2894,9 +2894,9 @@ def corpus_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus scan to source grain (map-side combinable);
     the rank-and-fill runs on the SOURCE dictionary (20 rows here,
-    thousands in production — the `grouped_running_sum` machinery keeps
+    thousands in production — the `grouped_running_sums` machinery keeps
     even that path range-partitioned, never a single-task window)."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
     from gluettalax_spark.operators.text import _quality_parts
 
     docs = load(spark, sf_dir, "documents")
@@ -2912,12 +2912,11 @@ def corpus_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(sum(q_int) * 100 div count(1) AS BIGINT)").alias("qmean_e6"),
     )
     tot = per_source.agg(F.expr("CAST(sum(n_tokens) div 2 AS BIGINT)").alias("budget"))
-    ranked = grouped_running_sum(
+    ranked = grouped_running_sums(
         per_source.withColumn("_g", F.lit(1)).withColumn("neg_q", -F.col("qmean_e6")),
         ["_g"],
         ["neg_q", "source"],
-        "n_tokens",
-        "cum",
+        [("n_tokens", "cum")],
     )
     return (
         ranked.crossJoin(F.broadcast(tot))
@@ -3295,7 +3294,7 @@ def orders_basket_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     unavoidable shuffle), then the histogram and its running sum live
     on the basket-size dictionary (data-model bounded) via the
     range-partitioned machinery."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     li = load(spark, sf_dir, "lineitem")
     h = (
@@ -3307,7 +3306,7 @@ def orders_basket_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = memory.cut(h, "persist")  # feeds the total AND the running sum
     t = h.agg(F.sum("n_orders").cast("long").alias("total"))
-    cum = grouped_running_sum(h, ["_g"], ["basket_size"], "n_orders", "cum_orders")
+    cum = grouped_running_sums(h, ["_g"], ["basket_size"], [("n_orders", "cum_orders")])
     return (
         cum.crossJoin(F.broadcast(t))
         .selectExpr(
@@ -3398,9 +3397,9 @@ def orders_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "persist",  # 10 rows; feeds total AND the curve
     )
     tot = dec.agg(F.sum("decile_cents").cast("long").alias("total"))
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
-    cum = grouped_running_sum(dec, ["_g"], ["decile"], "decile_cents", "cum_cents")
+    cum = grouped_running_sums(dec, ["_g"], ["decile"], [("decile_cents", "cum_cents")])
     return (
         cum.crossJoin(F.broadcast(tot))
         .withColumn("cum_cents", F.col("cum_cents").cast("long"))

@@ -117,19 +117,20 @@ def exact_global_rank(
     )
 
 
-def grouped_running_sum(
+def grouped_running_sums(
     df: DataFrame,
     group_cols: list[str],
     order_cols: list[Column | str],
-    value_col: str,
-    sum_name: str,
+    sums: "list[tuple[str, str]]",
     num_partitions: int | None = None,
-    isolate: bool = True,
+    lead_of: str | None = None,
+    lead_name: str = "_lead",
 ) -> DataFrame:
-    """Exact running ``sum(value_col)`` per group under ``order_cols``
-    (a total order within the group) WITHOUT ``Window.partitionBy(group)``
-    — that window funnels each group through one task, and groups here
-    (e.g. a crawl source) grow with the corpus.
+    """Exact running ``sum(value_col)`` as ``sum_name``, for every
+    ``(value_col, sum_name)`` pair in ``sums``, per group under
+    ``order_cols`` (a total order within the group) WITHOUT
+    ``Window.partitionBy(group)`` — that window funnels each group through
+    one task, and groups here (e.g. a crawl source) grow with the corpus.
 
     Same offsets construction as :func:`exact_global_rank`, grouped:
 
@@ -147,67 +148,10 @@ def grouped_running_sum(
     ``(pid, group)`` for the local window — unlike row_number, a running
     sum over an arbitrary column cannot ride monotonically_increasing_id.
     Every ``(pid, group)`` window group is bounded by the range-partition
-    size, so no task sees more than one partition's rows."""
-    spark = df.sparkSession
-    npart = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    part = df.repartitionByRange(npart, *group_cols, *order_cols).sortWithinPartitions(
-        *group_cols, *order_cols
-    )
-    with_pid = part.withColumn("_pid", F.spark_partition_id())
-    # Same isolation as exact_global_rank: offsets and data must label
-    # rows with the SAME _pid, which is only guaranteed when both consume
-    # one materialized run rather than two re-planned executions of the
-    # range exchange.
-    if isolate:
-        with_pid = memory.cut(with_pid, "lazy_ckpt")
-
-    w_off = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        with_pid.groupBy("_pid", *group_cols)
-        .agg(F.sum(value_col).alias("_gsum"))
-        .select(
-            "_pid",
-            *group_cols,
-            F.coalesce(F.sum("_gsum").over(w_off), F.lit(0)).alias("_off"),
-        )
-    )
-
-    w_local = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        with_pid.withColumn("_run", F.sum(value_col).over(w_local))
-        .join(F.broadcast(offsets), ["_pid", *group_cols])
-        .withColumn(sum_name, F.col("_run") + F.col("_off"))
-        .drop("_pid", "_run", "_off")
-    )
-
-
-def grouped_running_sums(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column | str],
-    sums: "list[tuple[str, str]]",
-    num_partitions: int | None = None,
-    isolate: bool = True,
-    lead_of: str | None = None,
-    lead_name: str = "_lead",
-) -> DataFrame:
-    """N exact running sums in ONE range shuffle (optimization r12,
-    guide §2.2 "shuffle once, aggregate many"): identical construction to
-    :func:`grouped_running_sum`, but every ``(value_col, sum_name)`` pair
-    in ``sums`` rides the same materialized range run, the same offsets
-    broadcast and the same local window — callers that chained two or
-    three single-column passes (2-3 range exchanges + hash exchanges +
-    checkpoints) collapse to one of each. Integer/decimal running sums
-    are exact under any partitioning, so the values are bit-identical to
-    the chained form.
+    size, so no task sees more than one partition's rows. All pairs in
+    ``sums`` share that one range run, offsets broadcast and local window
+    (guide §2.2 "shuffle once, aggregate many"); integer/decimal running
+    sums are exact under any partitioning.
 
     ``lead_of`` (must be the single ASCENDING order column) additionally
     emits the group's next order value as ``lead_name`` — the partition-
@@ -220,8 +164,11 @@ def grouped_running_sums(
         *group_cols, *order_cols
     )
     with_pid = part.withColumn("_pid", F.spark_partition_id())
-    if isolate:
-        with_pid = memory.cut(with_pid, "lazy_ckpt")
+    # Same isolation as exact_global_rank: offsets and data must label
+    # rows with the SAME _pid, which is only guaranteed when both consume
+    # one materialized run rather than two re-planned executions of the
+    # range exchange.
+    with_pid = memory.cut(with_pid, "lazy_ckpt")
 
     w_off = (
         Window.partitionBy(*group_cols)

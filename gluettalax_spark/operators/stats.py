@@ -632,7 +632,7 @@ def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     price's rank span is (cum − c_v, cum] off the per-price counts —
     the tiebreak columns can never split it. One map-side-combining
     groupBy collapses the fact table to the price dictionary, ONE
-    dictionary-scale `grouped_running_sum` ranks it, and each price
+    dictionary-scale `grouped_running_sums` ranks it, and each price
     explodes to the deciles its span touches (≤ dict + k rows). The r12
     form ranked every FACT row (`exact_global_rank` on the full table:
     a 3-column range exchange + a per-run localCheckpoint
@@ -640,7 +640,7 @@ def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     row) — the driver's 3rd-slowest key at 3.46 s. The oracle replays
     ANSI ntile directly; `ntile_from_rank` matches it exactly
     (property-tested in test_rank.py for arbitrary (n, k))."""
-    from gluettalax_spark.operators.rank import grouped_running_sum, ntile_from_rank
+    from gluettalax_spark.operators.rank import grouped_running_sums, ntile_from_rank
 
     li = load(spark, sf_dir, "lineitem").select(F.col("l_extendedprice").alias("v"))
     d = (
@@ -648,7 +648,7 @@ def agg_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("nv"))
         .withColumn("_g", F.lit(1))
     )
-    r = grouped_running_sum(d, ["_g"], ["v"], "nv", "cum")
+    r = grouped_running_sums(d, ["_g"], ["v"], [("nv", "cum")])
     n1 = d.agg(F.sum("nv").cast("long").alias("_n"))
     spans = r.crossJoin(F.broadcast(n1)).select(
         "v",
@@ -1833,7 +1833,7 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one filter + groupBy collapses events to the
     distinct-value axis; BOTH running ECDFs ride one
-    `grouped_running_sum` chain over that table (constant group —
+    `grouped_running_sums` chain over that table (constant group —
     range shuffle + metadata offsets, never an unpartitioned
     data-scale window); the argmax is TakeOrderedAndProject(1)."""
     from gluettalax_spark.operators.rank import grouped_running_sums
@@ -2575,7 +2575,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; everything after lives on the day dictionary (bounded by the
     corpus day span), where the running sums ride the range-partitioned
     rank machinery — no single-task window over subjects."""
-    from gluettalax_spark.operators.rank import grouped_running_sum, grouped_running_sums
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     events = load(spark, sf_dir, "events")
     horizon = events.agg(F.max(F.unix_micros("ts")).alias("h"))
@@ -2611,8 +2611,8 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(1 - F.col("observed")).cast("long").alias("c"),
     ).withColumn("_g", F.lit(1))
     total = subjects.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    cum = grouped_running_sum(
-        days.withColumn("dc", F.col("d") + F.col("c")), ["_g"], ["day"], "dc", "cum_dc"
+    cum = grouped_running_sums(
+        days.withColumn("dc", F.col("d") + F.col("c")), ["_g"], ["day"], [("dc", "cum_dc")]
     )
     risk = cum.crossJoin(F.broadcast(total)).select(
         "day",
@@ -3477,7 +3477,7 @@ def events_hazard_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: entry/conversion are user-keyed aggregates and one user-keyed
     join; everything after lives on the calendar-bounded day dictionary,
     where the running sums ride the range-partitioned rank machinery."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     events = load(spark, sf_dir, "events")
     horizon = events.agg(F.max(F.unix_micros("ts")).alias("h"))
@@ -3513,8 +3513,8 @@ def events_hazard_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(1 - F.col("observed")).cast("long").alias("c"),
     ).withColumn("_g", F.lit(1))
     total = subjects.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    cum = grouped_running_sum(
-        days.withColumn("dc", F.col("d") + F.col("c")), ["_g"], ["day"], "dc", "cum_dc"
+    cum = grouped_running_sums(
+        days.withColumn("dc", F.col("d") + F.col("c")), ["_g"], ["day"], [("dc", "cum_dc")]
     )
     hz = (
         cum.crossJoin(F.broadcast(total))
@@ -3532,7 +3532,7 @@ def events_hazard_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("_g", F.lit(1))
     )
-    out = grouped_running_sum(hz, ["_g"], ["day"], "hazard_ppm", "cum_hazard_ppm")
+    out = grouped_running_sums(hz, ["_g"], ["day"], [("hazard_ppm", "cum_hazard_ppm")])
     return out.select(
         "day", "n_risk", "d", "hazard_ppm", F.col("cum_hazard_ppm").cast("long").alias("cum_hazard_ppm")
     ).orderBy("day")

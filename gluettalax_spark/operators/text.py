@@ -3526,17 +3526,17 @@ def text_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     an integer.
 
     Scale: per-language ranking never funnels a language through one
-    task — the rank comes from `grouped_running_sum` over the
+    task — the rank comes from `grouped_running_sums` over the
     (lang, key) dictionary; the only windows partition by (lang, key)
     (tie blocks, hash-thin by construction). ntile is then pure
     arithmetic from (rank, per-lang total)."""
-    from gluettalax_spark.operators.rank import grouped_running_sum, ntile_from_rank
+    from gluettalax_spark.operators.rank import grouped_running_sums, ntile_from_rank
 
     scored = memory.cut(ppl_doc_keys(spark, sf_dir), "persist")
     dict_df = scored.groupBy("lang", "key_nano").agg(
         F.count(F.lit(1)).cast("long").alias("n_k")
     )
-    cum = grouped_running_sum(dict_df, ["lang"], ["key_nano"], "n_k", "cum")
+    cum = grouped_running_sums(dict_df, ["lang"], ["key_nano"], [("n_k", "cum")])
     n_lang = scored.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n_lang"))
     w_tie = Window.partitionBy("lang", "key_nano").orderBy("doc_id")
     ranked = (
@@ -3845,7 +3845,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange the vocabulary already pays), and doc-keyed running sums
     on the range-partitioned rank machinery — never a single-task
     window over docs."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
@@ -3870,8 +3870,8 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("_g", F.lit(1))
     )
-    c1 = grouped_running_sum(joined, ["_g"], ["doc_id"], "n_tok", "t_cum")
-    c2 = grouped_running_sum(c1, ["_g"], ["doc_id"], "novel", "v_cum")
+    c1 = grouped_running_sums(joined, ["_g"], ["doc_id"], [("n_tok", "t_cum")])
+    c2 = grouped_running_sums(c1, ["_g"], ["doc_id"], [("novel", "v_cum")])
     pts = c2.filter((F.col("t_cum") > 0) & (F.col("v_cum") > 0)).select(
         F.expr(f"CAST(floor(ln(CAST(t_cum AS DOUBLE)) * {_HEAPS_Q}) AS BIGINT)").alias("x"),
         F.expr(f"CAST(floor(ln(CAST(v_cum AS DOUBLE)) * {_HEAPS_Q}) AS BIGINT)").alias("y"),
@@ -4620,7 +4620,7 @@ def text_doc_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one groupBy to the (source × length) dictionary; the running
     count uses the range-partitioned machinery per source; nothing else
     touches data rows."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     docs = load(spark, sf_dir, "documents")
     dict_df = (
@@ -4628,7 +4628,7 @@ def text_doc_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("m"))
     )
-    r = grouped_running_sum(dict_df, ["source"], ["v"], "m", "cum")
+    r = grouped_running_sums(dict_df, ["source"], ["v"], [("m", "cum")])
     g = r.groupBy("source").agg(
         F.sum("m").cast("long").alias("n_docs"),
         F.sum(F.col("v").cast("decimal(38,0)") * F.col("m")).cast("long").alias("s"),

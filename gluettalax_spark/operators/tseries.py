@@ -1042,7 +1042,7 @@ def orders_interpurchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile probes are conditional aggregates over it."""
     from pyspark.sql.window import Window
 
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     orders = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -1062,7 +1062,7 @@ def orders_interpurchase_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_g", F.lit(1)),
         "persist",
     )
-    r = grouped_running_sum(dict_df, ["_g"], ["gap"], "ng", "cum").select("gap", "ng", "cum")
+    r = grouped_running_sums(dict_df, ["_g"], ["gap"], [("ng", "cum")]).select("gap", "ng", "cum")
     tot = (
         dict_df.agg(
             F.sum("ng").cast("long").alias("n_gaps"),

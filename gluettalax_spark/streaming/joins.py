@@ -383,8 +383,8 @@ def _register_funnel_latency():
         Scale: the pair join is the same user-key equi-join; min() per
         view is a partial-aggregated groupBy on the view id; everything
         after lives on the ≤24-row bucket dictionary, where the running
-        sum rides `grouped_running_sum` (no single-task window)."""
-        from gluettalax_spark.operators.rank import grouped_running_sum
+        sum rides `grouped_running_sums` (no single-task window)."""
+        from gluettalax_spark.operators.rank import grouped_running_sums
 
         ev = load(spark, sf_dir, "events")
         a = ev.filter(F.col("event_type") == "view").select(
@@ -417,7 +417,7 @@ def _register_funnel_latency():
         )
         hist = memory.cut(hist, "persist")  # feeds total AND running sum (lazy cut, r12)
         tot = hist.agg(F.sum("n_views").cast("long").alias("total"))
-        cum = grouped_running_sum(hist, ["_g"], ["bucket"], "n_views", "cum_views")
+        cum = grouped_running_sums(hist, ["_g"], ["bucket"], [("n_views", "cum_views")])
         return (
             cum.crossJoin(F.broadcast(tot))
             .selectExpr(

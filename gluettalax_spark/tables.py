@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -117,20 +118,27 @@ def fixture_fingerprint(sf_dir: str, name: str) -> tuple:
         return (sf_dir, name, None, None)
 
 
+_NANOS_CONF_LOCK = threading.Lock()
+
+
 @contextlib.contextmanager
 def _events_legacy_nanos_conf(spark: SparkSession):
     """Set spark.sql.legacy.parquet.nanosAsLong for the duration of a
-    DataFrame *creation*, restoring the prior value after."""
+    DataFrame *creation*, restoring the prior value after. The conf is
+    session-wide, so the window is held under a lock: two overlapping
+    windows (events loads on two job-runner threads) would otherwise let
+    the later one restore the earlier one's temporary ``true``."""
     key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    with _NANOS_CONF_LOCK:
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "true")
+        try:
+            yield
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -27,6 +27,18 @@ def spark():
     yield spark
 
 
+@pytest.fixture(autouse=True)
+def _query_scope():
+    """Each test runs as one query: the lineage cuts it makes are released
+    when it ends, as bench.py and the job runner release a key's cuts.
+    Otherwise a persisted fragment left by one test is substituted into a
+    later test's plan and changes that plan's node counts."""
+    from gluettalax_spark import memory
+
+    with memory.scope():
+        yield
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

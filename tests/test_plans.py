@@ -7,7 +7,9 @@ Correctness says a query returns the right rows; these tests pin the
 * column pruning reaches the scan (``ReadSchema`` carries only used cols);
 * dimension joins broadcast (no shuffle of the fact side for dims);
 * top-k is ``TakeOrderedAndProject`` (no global sort);
-* single-aggregation pipelines shuffle exactly once.
+* single-aggregation pipelines shuffle exactly once;
+* no key plans more exchanges, joins, sorts, scans, Python evals or
+  cuts than its budget in ``plans/budget.json`` (``make plans``).
 
 If a refactor regresses one of these, correctness tests stay green while
 the 100 TB plan silently rots — this file is what catches it.
@@ -15,11 +17,15 @@ the 100 TB plan silently rots — this file is what catches it.
 
 from __future__ import annotations
 
-import pytest
-
+import functools
 import re
 
-from gluettalax_spark.registry import queries
+import pytest
+
+from gluettalax_spark import memory
+from gluettalax_spark.registry import all_queries, queries
+from perfbench import etl, interactive
+from tools.dump_plans import COUNTERS, load_budget, over_budget, plan_summary
 
 
 def formatted_plan(df) -> str:
@@ -505,22 +511,101 @@ def test_pareto_take_ordered_no_full_rank(spark, sf_dir):
     assert _unbounded_global_windows(df) == []
 
 
+BUDGET = load_budget()
+
+# The keys the repo benchmark (perfbench/) runs: the TPC-H keys of
+# interactive_sql and the job keys of etl_pipeline.
+BENCHMARK_KEYS = sorted(k for k in BUDGET if interactive.KEY_RE.match(k)) + list(etl.JOB_KEYS)
+
+
+@functools.cache
+def _plan_problems(spark, sf_dir, name) -> list[str]:
+    """Build ``name`` once per session, in its own scope, and report each
+    unbounded global window and each plan counter over budget. A builder
+    that raises fails the caller."""
+    with memory.scope():
+        df = all_queries()[name].builder(spark, sf_dir)
+        bad = [f"{name}: unbounded global window {w}" for w in _unbounded_global_windows(df)]
+        return bad + over_budget(name, plan_summary(physical_plan(df)), BUDGET[name])
+
+
+@pytest.mark.parametrize("name", BENCHMARK_KEYS)
+def test_benchmark_key_within_plan_budget(spark, sf_dir, name):
+    assert _plan_problems(spark, sf_dir, name) == []
+
+
 @pytest.mark.slow  # whole-registry plan sweep (4+ min): gate tier (make gate)
 def test_no_unbounded_global_window_anywhere(spark, sf_dir):
-    """Sweep EVERY registered query: an unpartitioned WindowExec whose
-    input is not bounded by a limit or a pid-grouped aggregate is the
-    single-task pattern the round-4 verdict flagged — keep the registry
-    permanently free of it."""
-    offenders = {}
-    for name, builder in queries().items():
-        try:
-            df = builder(spark, sf_dir)
-        except Exception:  # noqa: BLE001 - plan-only sweep; runtime gates elsewhere
-            continue
-        bad = _unbounded_global_windows(df)
-        if bad:
-            offenders[name] = bad
-    assert offenders == {}, offenders
+    """Sweep EVERY registered query, building each once: an unpartitioned
+    WindowExec whose input is not bounded by a limit or a pid-grouped
+    aggregate is the single-task pattern the round-4 verdict flagged, and
+    a plan counter over the key's budget is a plan regression. Zero
+    ``cartesian`` and ``batch_eval_python`` budgets keep those keys free
+    of cartesian joins and row-at-a-time Python."""
+    problems = [p for name in sorted(all_queries()) for p in _plan_problems(spark, sf_dir, name)]
+    assert problems == [], problems
+
+
+def test_budget_names_every_registry_key_with_every_counter():
+    assert sorted(BUDGET) == sorted(all_queries())
+    assert {name for name, b in BUDGET.items() if set(b) != set(COUNTERS)} == set()
+
+
+_FIXED_PLAN = """AdaptiveSparkPlan isFinalPlan=false
++- TakeOrderedAndProject(limit=20, orderBy=[n#9L DESC NULLS LAST], output=[k#1L,n#9L])
+   +- SortMergeJoin [k#1L], [k#5L], Inner
+      :- Sort [k#1L ASC NULLS FIRST], false, 0
+      :  +- Exchange hashpartitioning(k#1L, 4), ENSURE_REQUIREMENTS, [plan_id=40]
+      :     +- BroadcastHashJoin [k#1L], [j#3L], LeftSemi, BuildRight, false
+      :        :- ArrowEvalPython [f(v#2)#7], [pythonUDF0#8], 200
+      :        :  +- FileScan parquet [k#1L,v#2] Batched: true, DataFilters: []
+      :        +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false)
+      :           +- Scan ExistingRDD[j#3L]
+      +- Sort [k#5L ASC NULLS FIRST], false, 0
+         +- Exchange hashpartitioning(k#5L, 4), ENSURE_REQUIREMENTS, [plan_id=41]
+            +- InMemoryTableScan [k#5L]
+                  +- InMemoryRelation [k#5L], StorageLevel(disk, memory, 1 replicas)
+                        +- AdaptiveSparkPlan isFinalPlan=true
+                           +- == Final Plan ==
+                              ResultQueryStage 1
+                              +- *(2) Sort [k#5L ASC NULLS FIRST], true, 0
+                                 +- ShuffleQueryStage 0
+                                    +- Exchange rangepartitioning(k#5L ASC NULLS FIRST, 4)
+                                       +- *(1) FileScan parquet [k#5L] Batched: true
+                           +- == Initial Plan ==
+                              Sort [k#5L ASC NULLS FIRST], true, 0
+                              +- Exchange rangepartitioning(k#5L ASC NULLS FIRST, 4)
+                                 +- BatchEvalPython [g(k#5L)#6], [pythonUDF1#10]
+                                    +- FileScan parquet [k#5L] Batched: true
+"""
+
+
+def test_plan_summary_counts_a_fixed_plan():
+    """Each node counts once; ``BroadcastExchange`` is not a shuffle
+    exchange, ``SortMergeJoin`` is not a sort, and a materialized cache's
+    Final Plan is skipped in favour of its Initial Plan."""
+    assert plan_summary(_FIXED_PLAN) == {
+        "arrow_eval_python": 1,
+        "batch_eval_python": 1,
+        "bhj": 1,
+        "bnlj": 0,
+        "cartesian": 0,
+        "exchanges": 3,
+        "existing_rdd_scan": 1,
+        "in_memory_scan": 1,
+        "map_in_py": 0,
+        "scans": 2,
+        "shj": 0,
+        "smj": 1,
+        "sorts": 3,
+    }
+
+
+def test_over_budget_names_the_key_and_the_counter():
+    counts = plan_summary(_FIXED_PLAN)
+    assert over_budget("q", counts, counts) == []
+    raised = {**counts, "exchanges": counts["exchanges"] + 1}
+    assert over_budget("q", raised, counts) == ["q: exchanges 4 > budget 3"]
 
 
 def test_outlier_mad_broadcasts_stats(spark, sf_dir):
@@ -812,36 +897,6 @@ def test_aqe_skew_join_splits_hot_key(spark):
     assert t_skew <= 2.0 * t_flat, (t_skew, t_flat)
 
 
-R11_NEW_OPS = [
-    "events_hazard_rate",
-    "stats_autocorrelation",
-    "orders_lorenz_curve",
-    "stats_levene_bf",
-    "text_readability_ari",
-    "graph_adamic_adar",
-    "orders_interpurchase_gaps",
-    "stats_grubbs_test",
-    "text_pii_pattern_scan",
-    "text_html_tag_residue",
-]
-
-
-@pytest.mark.slow  # gate tier (make gate): heavyweight recompute/replay (r13 tiering)
-def test_r11_ops_no_cartesian_or_rowwise_python(spark, sf_dir):
-    """Every round-11 operator: no cartesian/nested-loop join anywhere
-    except broadcast of a 1-row/constant-size side, and no row-at-a-time
-    Python (BatchEvalPython) in the plan — the two instant 100 TB
-    disqualifiers."""
-    for name in R11_NEW_OPS:
-        plan = physical_plan(queries()[name](spark, sf_dir))
-        assert "CartesianProduct" not in plan, name
-        assert "BatchEvalPython" not in plan, name
-        # BroadcastNestedLoopJoin is legitimate ONLY as a crossJoin of a
-        # broadcast scalar/constant-size aggregate (totals, probe sets).
-        for frag in plan.split("BroadcastNestedLoopJoin")[1:]:
-            assert "BuildRight" in frag[:80] or "BuildLeft" in frag[:80], (name, frag[:200])
-
-
 def test_pii_scan_prunes_to_source_and_text(spark, sf_dir):
     plan = formatted_plan(queries()["text_pii_pattern_scan"](spark, sf_dir))
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
@@ -876,7 +931,7 @@ def test_lorenz_has_no_data_scale_window(spark, sf_dir):
     plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     # The decile table is frozen with localCheckpoint (the plan reads
-    # Scan ExistingRDD); the cumulative sum rides grouped_running_sum,
+    # Scan ExistingRDD); the cumulative sum rides grouped_running_sums,
     # so every window is pid-keyed — the repo-wide audit must hold here.
     assert "Scan ExistingRDD" in plan, plan
     assert _unbounded_global_windows(df) == [], plan

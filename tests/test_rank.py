@@ -101,7 +101,7 @@ def test_exact_rank_empty_and_single_partition(spark):
 
 
 # --------------------------------------------------------------------------
-# grouped_running_sum
+# grouped_running_sums
 # --------------------------------------------------------------------------
 
 @pytest.mark.parametrize("n,groups,npart", [(1, 1, 4), (50, 3, 4), (1000, 7, 5), (1000, 7, 1)])
@@ -109,14 +109,14 @@ def test_grouped_running_sum_matches_naive_window(spark, n, groups, npart):
     """The distributed grouped running sum must equal the single-task
     Window.partitionBy(group) form it replaces, for degenerate and
     multi-partition shapes (including groups that span partitions)."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     df = spark.range(n).select(
         F.col("id"),
         (F.col("id") % groups).cast("string").alias("g"),
         (F.hash("id") % 50 + 50).alias("val"),
     )
-    got = grouped_running_sum(df, ["g"], ["id"], "val", "run", num_partitions=npart)
+    got = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=npart)
     w = Window.partitionBy("g").orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
     exp = df.withColumn("run", F.sum("val").over(w))
     assert got.select("id", "g", "run").exceptAll(exp.select("id", "g", "run")).count() == 0
@@ -124,13 +124,13 @@ def test_grouped_running_sum_matches_naive_window(spark, n, groups, npart):
 
 
 def test_grouped_running_sum_deterministic(spark):
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     df = spark.range(500).select(
         F.col("id"), (F.col("id") % 5).cast("string").alias("g"), F.lit(3).alias("val")
     )
-    a = grouped_running_sum(df, ["g"], ["id"], "val", "run", num_partitions=6).collect()
-    b = grouped_running_sum(df, ["g"], ["id"], "val", "run", num_partitions=6).collect()
+    a = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=6).collect()
+    b = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=6).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
@@ -139,12 +139,12 @@ def test_grouped_running_sum_no_group_partitioned_data_window(spark):
     group column over the raw data — every data-path window is keyed by
     (_pid, group); the group-only window may appear solely over the
     metadata-scale offsets aggregate."""
-    from gluettalax_spark.operators.rank import grouped_running_sum
+    from gluettalax_spark.operators.rank import grouped_running_sums
 
     df = spark.range(10_000).select(
         F.col("id"), (F.col("id") % 4).cast("string").alias("g"), F.lit(1).alias("val")
     )
-    out = grouped_running_sum(df, ["g"], ["id"], "val", "run", num_partitions=8)
+    out = grouped_running_sums(df, ["g"], ["id"], [("val", "run")], num_partitions=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     for ln in plan.splitlines():
         if "windowspecdefinition(" in ln and "_pid" not in ln:

@@ -26,6 +26,63 @@ def test_bad_format(spark):
         read_table(spark, "/tmp/x", fmt="avro")
 
 
+def test_concurrent_events_loads_restore_nanos_conf(spark, tmp_path, monkeypatch):
+    """Two events loads on two threads (two job-runner jobs) must leave
+    the session-wide nanosAsLong conf as they found it. The second load
+    starts once the first is inside its conf window; a barrier in the
+    reader then holds both inside at once if the windows can overlap,
+    and the first leaves before the second. If the windows cannot
+    overlap, the barrier times out and each load proceeds alone."""
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameReader
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    pq.write_table(
+        pa.table({"id": pa.array([1], pa.int64()), "ts": pa.array([10**18], pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    spark.conf.unset(key)
+    barrier = threading.Barrier(2, timeout=1)
+    first_inside, first_done = threading.Event(), threading.Event()
+    real_parquet = DataFrameReader.parquet
+
+    def parquet(self, *paths, **options):
+        first = threading.current_thread() is threads[0]
+        first_inside.set()
+        try:
+            barrier.wait()
+        except threading.BrokenBarrierError:
+            pass
+        else:
+            if not first:
+                first_done.wait(30)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    errors = []
+
+    def load_events():
+        try:
+            load(spark, str(tmp_path), "events")
+        except Exception as exc:  # noqa: BLE001 - reported by the assert below
+            errors.append(exc)
+        if threading.current_thread() is threads[0]:
+            first_done.set()
+
+    threads = [threading.Thread(target=load_events) for _ in range(2)]
+    threads[0].start()
+    first_inside.wait(30)
+    threads[1].start()
+    for t in threads:
+        t.join(60)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert spark.conf.get(key, None) is None
+
+
 def test_partitioned_write_layout(spark, sf_dir, tmp_path):
     docs = load(spark, sf_dir, "documents")
     path = str(tmp_path / "docs_by_lang")

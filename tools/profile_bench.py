@@ -4,8 +4,8 @@
 For each requested query: time builder() construction (driver-side plan
 building), then the noop-sink execution (computes every column, §1.4)
 AND the bench's count() action (the contract methodology) — best-of-N
-each — and dump .explain("formatted") to plans/<tag>/<name>_<phase>.txt
-with an Exchange/join-strategy summary line.
+each — and dump the executed plan to /tmp/profile_<phase>/<name>.txt
+with its node counts (tools/dump_plans.plan_summary) in the table.
 
 Usage:
   python tools/profile_bench.py <phase> [name ...]     # default: all HEADLINE
@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
@@ -28,31 +27,16 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def plan_summary(plan: str) -> dict:
-    return {
-        "exchanges": len(re.findall(r"\bExchange\b", plan)),
-        "smj": len(re.findall(r"\bSortMergeJoin\b", plan)),
-        "bhj": len(re.findall(r"\bBroadcastHashJoin\b", plan)),
-        "shj": len(re.findall(r"\bShuffledHashJoin\b", plan)),
-        "bnlj": len(re.findall(r"\bBroadcastNestedLoopJoin\b", plan)),
-        "cartesian": len(re.findall(r"\bCartesianProduct\b", plan)),
-        "python_eval": len(re.findall(r"BatchEvalPython|ArrowEvalPython", plan)),
-        "map_in_py": len(re.findall(r"MapInPandas|PythonMapInArrow|MapInArrow", plan)),
-        "sorts": len(re.findall(r"^\s*[+:*-]*\s*\(?\d*\)?\s*Sort\b", plan, re.M)),
-        "scans": len(re.findall(r"Scan parquet|FileScan", plan)),
-    }
-
-
 def main() -> None:
     phase = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:]
     runs = int(os.environ.get("SPARK_GRAFT_PROFILE_RUNS", "3"))
-    plans_only = os.environ.get("SPARK_GRAFT_PLANS_ONLY", "").lower() == "true"
 
     from gluettalax_spark import memory, registry
     from gluettalax_spark.session import get_spark, tune_for_fixture
 
     import bench
+    from tools.dump_plans import executed_plan, plan_summary
 
     spark = get_spark("gluettalax-profile")
     tune_for_fixture(spark, SF_DIR)
@@ -60,7 +44,7 @@ def main() -> None:
     if not names:
         names = [n for n in bench.HEADLINE if n in specs]
 
-    plans_dir = os.path.join(REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r13"))
+    plans_dir = f"/tmp/profile_{phase}"
     os.makedirs(plans_dir, exist_ok=True)
 
     # Warm-up (bench methodology)
@@ -74,8 +58,8 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"profile:{name}")
         with memory.scope():
             try:
-                build_s, noop_s, count_s = ([0.0], [0.0], [0.0]) if plans_only else ([], [], [])
-                for i in range(0 if plans_only else runs):
+                build_s, noop_s, count_s = [], [], []
+                for i in range(runs):
                     t0 = time.perf_counter()
                     df = builder(spark, SF_DIR)
                     build_s.append(time.perf_counter() - t0)
@@ -86,15 +70,12 @@ def main() -> None:
                     df2 = builder(spark, SF_DIR)
                     df2.count()
                     count_s.append(time.perf_counter() - t0)
-                df3 = builder(spark, SF_DIR)
-                jqe = df3._jdf.queryExecution()
-                mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                plan = jqe.explainString(mode)
+                plan = executed_plan(builder(spark, SF_DIR))
             except Exception as ex:  # keep sweeping; report the failure
                 out[name] = {"error": f"{type(ex).__name__}: {ex}"[:300]}
                 print(f"  {name}: ERROR {out[name]['error']}", file=sys.stderr, flush=True)
                 continue
-        with open(os.path.join(plans_dir, f"{name}_{phase}.txt"), "w") as fh:
+        with open(os.path.join(plans_dir, f"{name}.txt"), "w") as fh:
             fh.write(plan)
         summ = plan_summary(plan)
         out[name] = {
@@ -106,7 +87,8 @@ def main() -> None:
         print(
             f"  {name}: build {out[name]['build_sec']}s noop {out[name]['noop_sec']}s "
             f"count {out[name]['count_sec']}s exch={summ['exchanges']} "
-            f"smj={summ['smj']} bhj={summ['bhj']} py={summ['python_eval']}",
+            f"smj={summ['smj']} bhj={summ['bhj']} "
+            f"py={summ['batch_eval_python'] + summ['arrow_eval_python']}",
             file=sys.stderr,
             flush=True,
         )
