@@ -6,6 +6,7 @@ temporary directory."""
 
 from __future__ import annotations
 
+import contextvars
 import threading
 
 import numpy as np
@@ -49,8 +50,11 @@ class TestCutAndScope:
             memory.cut(spark.range(1), "none")
 
     def test_cut_outside_a_scope_is_left_alone(self, spark):
-        free = memory.cut(spark.range(100), "eager_ckpt")
+        """A fresh context has no open scope, as on a streaming micro-batch
+        thread: its cut is registered with no scope, so leaving the scope
+        open on this thread keeps its blocks."""
         with memory.scope():
+            free = contextvars.Context().run(memory.cut, spark.range(100), "eager_ckpt")
             memory.cut(spark.range(50), "eager_ckpt").count()
         assert _ckpt_id(free) in _persisted(spark)
         assert free.count() == 100

@@ -26,6 +26,7 @@ from gluettalax_spark import memory
 from gluettalax_spark.registry import all_queries, queries
 from perfbench import etl, interactive
 from tools.dump_plans import COUNTERS, load_budget, over_budget, plan_summary
+from tools.dump_plans import executed_plan as physical_plan
 
 
 def formatted_plan(df) -> str:
@@ -33,10 +34,6 @@ def formatted_plan(df) -> str:
     jqe = df._jdf.queryExecution()
     mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return jqe.explainString(mode)
-
-
-def physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_q6_pushdown_and_pruning(spark, sf_dir):

@@ -2,7 +2,9 @@
 """Regenerate plans/budget.json: per-key physical-plan node counts.
 
 Every registry key is built (not run) at sf0.001, each in its own
-``memory.scope()``, and the string of its ``executedPlan()`` is counted by
+``memory.scope()``, in a session of ``SPARK_GRAFT_CPUS`` cores (default
+8, as in ``tests/conftest.py``, since some builders branch on the
+default parallelism), and the string of its ``executedPlan()`` is counted by
 :func:`plan_summary`. ``tests/test_plans.py`` fails when a key's counts
 exceed its budget, so a budget only goes down: regenerate after a change
 that removes plan work, and review the diff.
@@ -92,7 +94,7 @@ def main() -> None:
     from gluettalax_spark.registry import all_queries
     from gluettalax_spark.session import get_spark, tune_for_fixture
 
-    spark = get_spark("plan-budget")
+    spark = get_spark("plan-budget", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     tune_for_fixture(spark, sf_dir)
     specs = all_queries()
     lines = []
